@@ -48,7 +48,9 @@ object Bench {
     * Each query is re-built from scratch on every warm pass (fresh
     * DataFrame, no Spark-side result caching; persisted intermediates
     * are released by the queries themselves after first use), so each
-    * warm pass re-does ALL data work — it skips only JVM warmup.
+    * warm pass re-does ALL data work — it skips only JVM warmup and
+    * the codegen of classes the cold pass compiled (reused from
+    * Spark's codegen cache, see [[GraftSession.configure]]).
     */
   def run(
       queries: Seq[(String, (SparkSession, String) => DataFrame)],

@@ -1,7 +1,9 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import scala.collection.mutable
 
 /** Optimization-round instrumentation: run named queries under a
@@ -13,9 +15,12 @@ import scala.collection.mutable
   * the Stages tab.
   *
   * Usage: runMain graft.JobProfile <sfDir> <query> [query...]
-  * Prints, per query: cold and warm wall seconds, then per-job lines
-  * (duration, description, stage count) and per-stage shuffle totals
-  * for the warm pass.
+  * Prints, per query: cold and warm wall seconds, the generated classes
+  * each pass compiled and their Janino seconds (a warm pass should
+  * compile none: a nonzero warm count means the plan's classes are not
+  * reused from Spark's codegen cache), then per-job lines (duration,
+  * description, stage count) and per-stage shuffle totals for the warm
+  * pass.
   */
 object JobProfile {
   final case class StageRec(
@@ -56,6 +61,18 @@ object JobProfile {
     def reset(): Unit = synchronized { jobs.clear(); stages.clear() }
   }
 
+  /** Janino compiles and their seconds, JVM-wide (the counters are
+    * static: concurrent queries would share them). */
+  final case class Codegen(compiles: Long, seconds: Double) {
+    def -(o: Codegen): Codegen = Codegen(compiles - o.compiles, seconds - o.seconds)
+    override def toString: String = f"compiles=$compiles compile_s=$seconds%.3f"
+  }
+  object Codegen {
+    def now(): Codegen = Codegen(
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+      CodeGenerator.compileTime / 1e9)
+  }
+
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: JobProfile <sfDir> <query> [query...]")
     val sfDir = args(0)
@@ -77,14 +94,15 @@ object JobProfile {
       SparkEntry.queries.get(n) match {
         case None => println(s"unknown query '$n'")
         case Some(fn) =>
-          def once(): Double = {
+          def once(): (Double, Codegen) = {
+            val c0 = Codegen.now()
             val t0 = System.nanoTime()
             Bench.evalAll(fn(spark, sfDir))
-            (System.nanoTime() - t0) / 1e9
+            ((System.nanoTime() - t0) / 1e9, Codegen.now() - c0)
           }
-          val cold = once()
+          val (cold, coldGen) = once()
           rec.reset()
-          val warm = once()
+          val (warm, warmGen) = once()
           // listener events are posted async: poll until the recorded
           // job count stabilizes (a fixed sleep under-reports on a
           // loaded host, and profile decisions ride these numbers)
@@ -97,6 +115,8 @@ object JobProfile {
             if (n == last) same += 1 else { same = 0; last = n }
           }
           println(f"===== $n cold=$cold%.3f warm=$warm%.3f =====")
+          println(s"  codegen cold: $coldGen")
+          println(s"  codegen warm: $warmGen")
           rec.synchronized {
             val jobTotal = rec.jobs.values.map(j => j.t1 - j.t0).sum / 1e3
             println(f"  jobs=${rec.jobs.size} jobWallSum=$jobTotal%.3f s (overlap possible)")

@@ -210,6 +210,8 @@ object DqFunctions {
     * fraction of agreeing components. Native one-loop expression (r21)
     * — value-identical to the previous zip_with + aggregate HOF pair,
     * without the boxed intermediate array per scored candidate pair.
+    * Signatures may be arrays of any integral type (compared as
+    * widened longs); other element types fail analysis.
     */
   def minhashAgreement(sigA: Column, sigB: Column): Column =
     MinhashAgreementExpression.minhashAgreementNative(sigA, sigB)

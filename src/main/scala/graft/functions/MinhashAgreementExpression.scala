@@ -1,11 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
+import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DoubleType, IntegerType, LongType, ShortType}
 
 /** Native minhash-agreement: fraction of equal components of two
   * signature arrays, in one primitive loop — replacing the
@@ -19,6 +19,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
   * the `when` yielded 0), null elements are never equal, and the
   * divisor is the LEFT signature's length, exactly as before. NULL in
   * either array column yields NULL.
+  *
+  * Element types: any integral type on either side (tinyint, smallint,
+  * int, bigint; the two may differ). Elements compare as widened
+  * longs, which is exact, so `array<int>` signatures agree with their
+  * `array<bigint>` casts. Floating, decimal and string elements are
+  * rejected at analysis.
   */
 case class MinhashAgreementExpr(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -26,14 +32,23 @@ case class MinhashAgreementExpr(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
 
+  private def elementType(e: Expression): Option[DataType] = e.dataType match {
+    case ArrayType(t @ (ByteType | ShortType | IntegerType | LongType), _) => Some(t)
+    case _ => None
+  }
+
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
+    (elementType(left), elementType(right)) match {
+      case (Some(_), Some(_)) =>
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case (l, r) =>
+      case _ =>
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"minhash_agreement requires two array<bigint>, got ${l.simpleString}, ${r.simpleString}")
+          "minhash_agreement requires two arrays of integral elements, got " +
+            s"${left.dataType.simpleString}, ${right.dataType.simpleString}")
     }
+
+  private lazy val leftElement = elementType(left).get
+  private lazy val rightElement = elementType(right).get
 
   override def nullSafeEval(a: Any, b: Any): Any = {
     val sa = a.asInstanceOf[ArrayData]
@@ -43,7 +58,9 @@ case class MinhashAgreementExpr(left: Expression, right: Expression)
     var eq = 0
     var i = 0
     while (i < n) {
-      if (!sa.isNullAt(i) && !sb.isNullAt(i) && sa.getLong(i) == sb.getLong(i))
+      if (!sa.isNullAt(i) && !sb.isNullAt(i) &&
+          sa.get(i, leftElement).asInstanceOf[Number].longValue ==
+            sb.get(i, rightElement).asInstanceOf[Number].longValue)
         eq += 1
       i += 1
     }
@@ -60,7 +77,8 @@ case class MinhashAgreementExpr(left: Expression, right: Expression)
          |int $eq = 0;
          |for (int $i = 0; $i < $n; $i++) {
          |  if (!$sa.isNullAt($i) && !$sb.isNullAt($i) &&
-         |      $sa.getLong($i) == $sb.getLong($i)) $eq++;
+         |      (long) ${CodeGenerator.getValue(sa, leftElement, i)} ==
+         |      (long) ${CodeGenerator.getValue(sb, rightElement, i)}) $eq++;
          |}
          |${ev.value} = (double) $eq / (double) $na;
        """.stripMargin

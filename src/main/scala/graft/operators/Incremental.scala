@@ -96,18 +96,6 @@ object Incremental {
       .withColumn("shift", lit(shift))
   }
 
-  /** Merge moments-partials tables: integer adds, any order. */
-  def mergeMoments(parts: DataFrame*): DataFrame = {
-    require(parts.nonEmpty, "at least one moments frame required")
-    parts.reduce(_.unionByName(_))
-      .groupBy(col("key"), col("bucket_start_us"), col("shift"))
-      .agg(sum(col("n")).as("n"),
-        sum(col("s1")).cast("decimal(38,0)").as("s1"),
-        sum(col("s2")).cast("decimal(38,0)").as("s2"),
-        sum(col("s3")).cast("decimal(38,0)").as("s3"),
-        sum(col("s4")).cast("decimal(38,0)").as("s4"))
-  }
-
   /** Lifetime per-key moments over a moments log. */
   def keyMoments(partials: DataFrame): DataFrame =
     partials.groupBy(col("key"), col("shift"))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Schema-on-read over semi-structured (JSON string) columns — the
@@ -38,10 +38,4 @@ object SemiStructured {
       .select(col("*"), col(s"$tmp.*"))
       .drop(tmp)
   }
-
-  /** One extracted field as a Column without materializing the rest
-    * (still a full parse — prefer [[extractJson]] for many fields).
-    */
-  def jsonField(jsonCol: Column, path: String): Column =
-    get_json_object(jsonCol, path)
 }

@@ -328,15 +328,4 @@ object StreamingFreshness {
               |AND click_ts <= view_ts + INTERVAL $attributionWindow""".stripMargin))
       .select(col("c_user").as("user_id"), col("view_ts"), col("click_ts"))
   }
-
-  /** Streaming reconciliation precursor: per-site running counts
-    * (PPE's census as a continuously-maintained aggregate).
-    */
-  def runningSiteCounts(events: DataFrame, watermarkDelay: String = "1 hour"): DataFrame =
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupBy(window(col("ts"), "1 day"),
-        pmod(col("user_id"), lit(25)).cast("int").as("site_id"))
-      .agg(count(lit(1)).as("record_count"))
-      .select(col("window.start").as("window_start"), col("site_id"), col("record_count"))
 }

@@ -63,10 +63,6 @@ object StreamingIncremental {
       }
       .start()
 
-  /** Lifetime per-key moments of a moments log (merge-at-read). */
-  def readKeyMoments(spark: SparkSession, path: String): DataFrame =
-    Incremental.keyMoments(spark.read.parquet(path))
-
   /** Current per-key totals of a partials log: merge-at-read over
     * partials rows (never raw history). */
   def readTotals(spark: SparkSession, path: String): DataFrame =

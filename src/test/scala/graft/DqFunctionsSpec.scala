@@ -141,6 +141,33 @@ class DqFunctionsSpec extends AnyFunSuite {
     assert(nul.forall(_.isNullAt(0)))
   }
 
+  test("native MinhashAgreement takes integral element types, compared as widened longs") {
+    import graft.functions.MinhashAgreementExpression.minhashAgreementNative
+    val sigs = Seq(
+      (Seq(1L, 2L, 3L, 4L), Seq(1L, 9L, 3L, 4L)),
+      (Seq(-1L, 127L, 0L), Seq(-1L, 127L, 1L)),
+      (Seq(5L, 6L), Seq(5L, 6L, 7L))).toDF("a", "b")
+    val expected = sigs.select(minhashAgreementNative($"a", $"b"))
+      .as[Double].collect().toSeq
+    assert(expected == Seq(0.75, 2.0 / 3.0, 1.0))
+    for (t <- Seq("int", "smallint", "tinyint"); mixed <- Seq(false, true)) {
+      val a = $"a".cast(s"array<$t>")
+      val b = if (mixed) $"b" else $"b".cast(s"array<$t>")
+      val got = sigs.select(minhashAgreementNative(a, b)).as[Double].collect().toSeq
+      assert(got == expected, s"array<$t> vs ${if (mixed) "array<bigint>" else s"array<$t>"}")
+    }
+    // a value beyond the narrower type's range is not silently equal
+    val wide = Seq((Seq(1L << 33), Seq(0L))).toDF("a", "b")
+      .select(minhashAgreementNative($"a", $"b".cast("array<int>"))).as[Double].head()
+    assert(wide == 0.0)
+    for (t <- Seq("double", "string", "decimal(20,0)")) {
+      val e = intercept[org.apache.spark.sql.AnalysisException] {
+        sigs.select(minhashAgreementNative($"a".cast(s"array<$t>"), $"b")).collect()
+      }
+      assert(e.getMessage.contains("integral"), e.getMessage)
+    }
+  }
+
   test("native MinhashFromBase equals the HOF transform+array_min composition") {
     import graft.functions.{DqFunctions, MinhashExpression}
     val docs = Tables.documents(spark, TestSpark.sf).limit(200)

@@ -45,8 +45,10 @@ object TestSpark {
       ctx.updateLoggers()
     } catch { case _: Throwable => () } // non-log4j2 backend: no counter
 
+  /** Built through [[GraftSession.configure]], so the suites run the
+    * engine's own session settings (codegen class reuse among them). */
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
+    val s = GraftSession.configure(SparkSession.builder())
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
