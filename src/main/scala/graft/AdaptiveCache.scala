@@ -65,13 +65,12 @@ object AdaptiveCache {
     censusFrames.put(df, java.lang.Boolean.TRUE)
     // the set/persist/restore window is serialized (one lock for every
     // bracketed persist on the process): SparkSession conf is session-
-    // global across threads, so a concurrent plain persist landing
-    // inside the bracket would cache under the wrong flag and a racing
-    // restore could clobber a concurrent bracket's set. The engine's
-    // entry points are sequential today; the lock makes the library
-    // API safe for concurrent callers too. Lock order is always
-    // handoff -> bracket (CacheLifecycle's repersist path takes them
-    // in the same order).
+    // global across threads, so two brackets must not interleave their
+    // set and restore. The lock does not make concurrent callers safe:
+    // a plain persist on another thread can still land inside the
+    // bracket, and invocations on one canonical plan must be sequential
+    // (see CacheLifecycle). Lock order is always handoff -> bracket
+    // (CacheLifecycle's repersist path takes them in the same order).
     CacheLifecycle.withHandoff(df) {
       bracketLock.synchronized {
         val conf = df.sparkSession.conf

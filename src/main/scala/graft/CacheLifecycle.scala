@@ -24,6 +24,15 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * intermediates uncached — correct, just slower; callers that execute
   * one plan repeatedly should use the *WithCaches variants and release
   * when THEY are done.
+  *
+  * Contract: invocations whose caches have the same canonical plan
+  * must be sequential — each one's returned plan executed before the
+  * next one registers. A registration supersedes the prior claim on
+  * its plan and releases it at once, so a concurrent invocation on the
+  * same plan would have its shared cache entry dropped mid-execution
+  * (recomputed, not wrong) and its claim consumed. The locks here only
+  * keep one hand-off's steal, persist and release from interleaving;
+  * they do not make the API safe for concurrent callers.
   */
 object CacheLifecycle {
 

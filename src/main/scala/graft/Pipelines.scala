@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Freshness
@@ -10,15 +10,20 @@ import graft.operators.Reconciliation.CensusSpec
 import graft.sources.{FanOut, Sinks}
 
 /** The reference's two entry-point flows (SURVEY.md §3), end to end:
-  * multi-source discovery → fan-out with per-source skip → check →
-  * report → sink with verify-count. Each run returns the persisted
-  * row count and the skip/telemetry records the reference printed as
-  * log lines (data_consistency_checks.py:146-147, 166-168).
+  * multi-source discovery → per-source check with skip → one scan per
+  * table over every planned source → grouped check → report → sink
+  * with verify-count. Each run returns the persisted row count and the
+  * skip/telemetry records the reference printed as log lines
+  * (data_consistency_checks.py:146-147, 166-168).
   *
   * Where the reference visits sources in a sequential Python loop and
-  * eagerly materializes between steps, here every run is ONE lazy
-  * Catalyst plan: per-source subtrees execute as parallel stages, and
-  * the only materialization is the sink write.
+  * eagerly materializes between steps, here the fleet is one relational
+  * plan: [[FanOut.planTables]] checks each source on the driver (file
+  * system and parquet footers, no Spark job), each table is read once
+  * over all planned sources with the source as a column, and the
+  * checks aggregate per source with the grouped operators. The plan
+  * and its Spark jobs grow with the tables, not with the sources; the
+  * only materialization is the sink write and its read-back.
   */
 object Pipelines {
 
@@ -29,10 +34,18 @@ object Pipelines {
     def telemetry: String = FanOut.telemetryLine(sourcesTotal, skipped.size)
   }
 
+  /** Facility / site id of a source: its name's hash (the config-lookup
+    * analog when no global_property-style table exists). */
+  private def sourceKey(name: Column): Column =
+    pmod(xxhash64(name), lit(Int.MaxValue)).cast("int")
+
   /** DCC freshness-consistency pipeline over a directory of source
     * "schemas" (each a subdirectory holding one parquet per table):
     * discover → per-source loading status (count + max date per fact
-    * table) → pivot wide → ordinal stddev score → replace-sink.
+    * table, grouped by facility over one scan per table) → pivot wide →
+    * ordinal stddev score → replace-sink. Every planned source gets a
+    * report row, also one whose rows all fall after the cutoff (null
+    * max dates and score).
     */
   def freshnessPipeline(
       spark: SparkSession,
@@ -42,34 +55,32 @@ object Pipelines {
       cutoff: Column,
       outPath: String): RunReport = {
     val sources = FanOut.discoverSources(sourcesRoot, sourcePrefix)
-    val fanned = FanOut.fanOut(sources, { src =>
-      val specs = factTables.map { case (t, tsCol) =>
-        FreshnessSpec(t, spark.read.parquet(s"$sourcesRoot/$src/$t"), col(tsCol), cutoff)
-      }
-      Freshness.loadingStatus(
-        // facility identity = the source itself (the config-lookup
-        // analog when no global_property-style table exists)
-        spark.range(1).select(
-          pmod(xxhash64(lit(src)), lit(Int.MaxValue)).cast("int").as("facility_id"),
-          lit(src).as("facility_name")),
-        specs, cutoff)
-    })
-    val written = fanned.df match {
-      case None => 0L
-      case Some(longDf) =>
+    val plan = FanOut.planTables(spark, sourcesRoot, sources,
+      factTables.map { case (t, tsCol) => t -> Seq(tsCol) })
+    val written =
+      if (plan.sources.isEmpty) 0L
+      else {
+        val long = Freshness.groupedLoadingStatus(sourceKey(col(FanOut.SourceColumn)),
+          factTables.map { case (t, tsCol) =>
+            FreshnessSpec(t, plan.scan(spark, t), col(tsCol), cutoff)
+          })
+        val facilities = spark.createDataset(plan.sources)(Encoders.STRING)
+          .select(sourceKey(col("value")).as("facility_id"), col("value").as("facility_name"))
         val tables = factTables.map(_._1)
         val wide = Freshness.pivotMaxDates(
-          longDf, Seq("facility_id", "facility_name"), tables)
+          facilities.join(long, Seq("facility_id"), "left"),
+          Seq("facility_id", "facility_name"), tables)
         val report = Freshness.freshnessReport(
           wide, Seq("facility_id", "facility_name"), tables, current_date())
         Sinks.writeReplace(report, outPath) // S7 + S9 verify read-back
-    }
-    RunReport(written, sources.size, fanned.skipped)
+      }
+    RunReport(written, sources.size, plan.skipped)
   }
 
-  /** PPE reconciliation pipeline: source census (per-source fan-out,
-    * soft-delete filtered) vs destination census → full outer join →
-    * variance → append-sink (accumulate-by-run-date design, S8).
+  /** PPE reconciliation pipeline: source census (grouped by site over
+    * one scan per table, soft-delete filtered) vs destination census →
+    * full outer join → variance → append-sink (accumulate-by-run-date
+    * design, S8).
     */
   def reconciliationPipeline(
       spark: SparkSession,
@@ -79,19 +90,18 @@ object Pipelines {
       destination: DataFrame, // (site_id, table_name, record_count)
       outPath: String): RunReport = {
     val sources = FanOut.discoverSources(sourcesRoot, sourcePrefix)
-    val fanned = FanOut.fanOut(sources, { src =>
-      Reconciliation.censusUnion(censusTables.map { case (t, voidedCol) =>
-        CensusSpec(t, spark.read.parquet(s"$sourcesRoot/$src/$t"),
-          pmod(xxhash64(lit(src)), lit(Int.MaxValue)).cast("int"), voidedCol.map(c => col(c) === 0))
-      })
-    })
-    val written = fanned.df match {
-      case None => 0L
-      case Some(srcCounts) =>
-        val report = Reconciliation.reconcile(
-          srcCounts.drop("source_schema"), destination, current_date())
-        Sinks.writeAppend(report, outPath)
-    }
-    RunReport(written, sources.size, fanned.skipped)
+    val plan = FanOut.planTables(spark, sourcesRoot, sources,
+      censusTables.map { case (t, voidedCol) => t -> voidedCol.toSeq })
+    val written =
+      if (plan.sources.isEmpty) 0L
+      else {
+        val srcCounts = Reconciliation.censusUnion(censusTables.map { case (t, voidedCol) =>
+          CensusSpec(t, plan.scan(spark, t), sourceKey(col(FanOut.SourceColumn)),
+            voidedCol.map(c => col(c) === 0))
+        })
+        Sinks.writeAppend(
+          Reconciliation.reconcile(srcCounts, destination, current_date()), outPath)
+      }
+    RunReport(written, sources.size, plan.skipped)
   }
 }

@@ -1,9 +1,19 @@
 package graft.sources
 
+import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Success, Try}
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Multi-source fan-out with per-source fault isolation (SURVEY.md
   * S4/S5/S6, reference: data_consistency_checks.py:85-116).
@@ -11,13 +21,18 @@ import org.apache.spark.sql.functions._
   * The reference loops over discovered `openmrs_*` schemas
   * sequentially and, on MySQL error 1146 (missing table), skips the
   * whole schema's result atomically (§2.8.8) — a missing table never
-  * drops just one branch. Re-expressed Spark-first: each source
-  * contributes one *lazy* plan; plan construction (which is where a
-  * missing path/table surfaces as AnalysisException) is wrapped in
-  * Try per source, failed sources are recorded and skipped, and the
-  * survivors union into one Catalyst DAG whose per-source subtrees
-  * execute as parallel stages — the reference's sequential visit
-  * parallelized for free.
+  * drops just one branch. Two re-expressions, both keeping that
+  * skip-the-whole-source rule:
+  *
+  *  - [[planTables]] (parquet sources, the pipelines' path): a
+  *    driver-side check per (source, table) against the file system
+  *    and the parquet footers decides which sources are planned, with
+  *    no Spark job; each table is then read by ONE scan over every
+  *    planned source, rows attributed to their source as data. The
+  *    plan and its jobs grow with the tables, not with the fleet.
+  *  - [[fanOut]] (JDBC sources): one lazy plan per source, analysed
+  *    under Try (a missing table surfaces as an AnalysisException),
+  *    failed sources recorded and skipped, the survivors unioned.
   */
 object FanOut {
 
@@ -74,7 +89,7 @@ object FanOut {
         // force analysis now so resolution errors surface per-source
         val df = read(src)
         df.queryExecution.assertAnalyzed()
-        df.withColumn("source_schema", lit(src))
+        df.withColumn(SourceColumn, lit(src))
       }
     }
     val skipped = results.collect {
@@ -88,10 +103,141 @@ object FanOut {
     FanOutResult(frames.reduceOption(_ unionByName _), skipped)
   }
 
-  /** Convenience: discover + fan out in one call. */
-  def fanOutFromRoot(spark: SparkSession, root: String, prefix: String)(
-      read: String => DataFrame): FanOutResult = {
-    val sources = discoverSources(root, prefix)
-    fanOut(sources, read)
+  /** The column a [[TablePlan.scan]] attributes each row's source in. */
+  val SourceColumn = "source_schema"
+
+  /** One table's shared scan: the required columns as the first planned
+    * source stores them, and each planned source's table path. */
+  final case class TableScan(table: String, schema: StructType, paths: Seq[(String, Path)])
+
+  /** The planned sources (discovery order), the skipped ones with their
+    * reasons (discovery order), and one scan per table. */
+  final case class TablePlan(
+      sources: Seq[String], skipped: Seq[SkipRecord], scans: Seq[TableScan]) {
+
+    /** One parquet scan of `table` over every planned source, each row
+      * tagged with its source in [[SourceColumn]]. The source comes from
+      * the row's `_metadata.file_path` (a URI-escaped string) matched
+      * against each source's qualified table-path URI as a prefix, so
+      * partition subdirectories and escaped names attribute correctly.
+      * The schema is given, so the read infers nothing (no Spark job);
+      * it holds the required columns only. Past
+      * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32)
+      * sources, Spark lists the paths with one job per scan. */
+    def scan(spark: SparkSession, table: String): DataFrame = {
+      val t = scans.find(_.table == table).getOrElse(
+        throw new IllegalArgumentException(s"table '$table' was not planned"))
+      val file = col("_metadata.file_path")
+      val hits = t.paths.map { case (src, path) =>
+        // a table stored as one file matches whole
+        spellings(path.toUri).map(u => file.startsWith(s"$u/") || file === u).reduce(_ || _) ->
+          lit(src)
+      }
+      val source = hits.tail.foldLeft(when(hits.head._1, hits.head._2)) {
+        case (c, (hit, src)) => c.when(hit, src)
+      }
+      spark.read.schema(t.schema)
+        .option("recursiveFileLookup", "true") // no partition inference across sources
+        .parquet(t.paths.map(_._2.toString): _*)
+        .withColumn(SourceColumn, source)
+    }
+  }
+
+  /** Decide, on the driver and with no Spark job, which sources a
+    * per-table scan can read: a source is planned when, for every
+    * `(table, requiredColumns)`, its `root/source/table` path exists,
+    * holds a data file, and the first data file's parquet footer has the
+    * required columns (resolved as the session resolves names) with the
+    * same Spark type as in the first planned source. A source failing
+    * any check is skipped whole, with the reason — the skip set the
+    * per-source analysis gave, plus a type mismatch, which would fail
+    * the shared scan at run time. A missing column is never null-filled.
+    * An unreadable footer propagates, as a failing read did before.
+    */
+  def planTables(
+      spark: SparkSession, root: String, sources: Seq[String],
+      required: Seq[(String, Seq[String])]): TablePlan = {
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val conf = spark.sessionState.conf
+    val toSpark = new ParquetToSparkSchemaConverter(conf)
+    val tables = required.groupBy(_._1).view.mapValues(_.flatMap(_._2).distinct).toMap
+    val order = required.map(_._1).distinct
+
+    def probe(src: String, table: String): Either[String, (Path, StructType)] = {
+      val path = new Path(new Path(root, src), table)
+      val fs = path.getFileSystem(hadoopConf)
+      firstDataFile(fs, path) match {
+        case None => Left(s"table '$table' not found or holds no data file")
+        case Some(file) =>
+          val footer = readSchema(hadoopConf, file)
+          val fields = footer.getFields.asScala.toSeq
+          val found = tables(table).map(c => c -> fields.find(f => conf.resolver(f.getName, c)))
+          found.collectFirst { case (c, None) => c } match {
+            case Some(c) => Left(s"table '$table' has no column '$c' (${file.getPath.getName})")
+            case None =>
+              val cols = new MessageType(footer.getName, found.flatMap(_._2).asJava)
+              try Right(fs.makeQualified(path) -> toSpark.convert(cols))
+              catch { case e: AnalysisException => // a type Spark cannot read
+                Left(s"table '$table': ${e.getSimpleMessage.linesIterator.next()}")
+              }
+          }
+      }
+    }
+
+    // first failing table, in `required` order, names the skip reason
+    val probed = sources.map { src =>
+      src -> order.foldLeft[Either[String, Map[String, (Path, StructType)]]](Right(Map.empty)) {
+        case (Right(ok), t) => probe(src, t).map(r => ok + (t -> r))
+        case (left, _) => left
+      }
+    }
+    val reference = probed.collectFirst { case (_, Right(ok)) => ok.view.mapValues(_._2).toMap }
+    val checked = probed.map {
+      case (src, Right(ok)) =>
+        val mismatch = for {
+          ref <- reference.toSeq
+          t <- order
+          (theirs, ours) <- ref(t).fields.zip(ok(t)._2.fields)
+          if theirs.dataType != ours.dataType
+        } yield s"table '$t' column '${ours.name}' is ${ours.dataType.simpleString}, " +
+          s"not ${theirs.dataType.simpleString} as in the first planned source"
+        src -> mismatch.headOption.toLeft(ok)
+      case other => other
+    }
+    TablePlan(
+      checked.collect { case (src, Right(_)) => src },
+      checked.collect { case (src, Left(reason)) => SkipRecord(src, reason) },
+      order.flatMap { t =>
+        val planned = checked.collect { case (src, Right(ok)) => src -> ok(t)._1 }
+        reference.map(ref => TableScan(t, ref(t), planned))
+      })
+  }
+
+  /** The first data file under `path` in a depth-first walk in name
+    * order (for a flat table directory, the file Spark's own inference
+    * reads), skipping hidden and `_`-prefixed names at every level, as
+    * Spark's listing does; None when the path is missing or holds no
+    * data file. */
+  private def firstDataFile(fs: FileSystem, path: Path): Option[FileStatus] = {
+    def visible(s: FileStatus) = !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith(".")
+    def first(s: FileStatus): Option[FileStatus] =
+      if (!s.isDirectory) Some(s)
+      else fs.listStatus(s.getPath).filter(visible).sortBy(_.getPath.toString).iterator
+        .flatMap(first).nextOption()
+    Try(fs.getFileStatus(path)).toOption.flatMap(first)
+  }
+
+  /** The spellings a file URI can take in `_metadata.file_path`: Hadoop
+    * writes a URI without authority as `file:/p` for a listed directory's
+    * children and as `file:///p` for a qualified path. */
+  private def spellings(uri: java.net.URI): Seq[String] =
+    if (uri.getScheme == null || uri.getRawAuthority != null) Seq(uri.toString)
+    else Seq(s"${uri.getScheme}:${uri.getRawPath}", s"${uri.getScheme}://${uri.getRawPath}")
+
+  private def readSchema(conf: Configuration, file: FileStatus): MessageType = {
+    val options = HadoopReadOptions.builder(conf)
+      .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build()
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf), options)
+    try reader.getFooter.getFileMetaData.getSchema finally reader.close()
   }
 }

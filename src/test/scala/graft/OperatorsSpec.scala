@@ -84,9 +84,8 @@ class OperatorsSpec extends AnyFunSuite {
     new java.io.File(s"$root/openmrs_broken").mkdirs() // schema with missing table
     write("other_c", Seq((9, "ignored")))              // fails prefix filter
 
-    val res = FanOut.fanOutFromRoot(spark, root.toString, "openmrs_") { src =>
-      spark.read.parquet(s"$root/$src/data")
-    }
+    val res = FanOut.fanOut(FanOut.discoverSources(root.toString, "openmrs_"),
+      src => spark.read.parquet(s"$root/$src/data"))
     assert(res.skipped.map(_.source) == Seq("openmrs_broken"))
     val df = res.df.get
     assert(df.count() == 3)

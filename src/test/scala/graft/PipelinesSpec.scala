@@ -69,6 +69,181 @@ class PipelinesSpec extends AnyFunSuite {
     assert(spark.read.parquet(out).count() == 4)
   }
 
+  // ---- fleet fan-out: fault isolation, source attribution, scaling ----
+
+  private def siteKey(src: String): Int =
+    spark.range(1).select(pmod(xxhash64(lit(src)), lit(Int.MaxValue)).cast("int"))
+      .head().getInt(0)
+
+  /** (id, event_ts, voided) rows dated `day` in 2020, every third voided. */
+  private def facts(n: Int, day: Int = 10) =
+    (1 to n).map(k => (k, ts(f"2020-${1 + k % 12}%02d-$day%02d 00:00:00"), if (k % 3 == 0) 1 else 0))
+      .toDF("id", "event_ts", "voided")
+
+  private def dccRun(root: String, tables: Seq[String], out: String,
+      cutoff: String = "2021-01-01 00:00:00"): Pipelines.RunReport =
+    Pipelines.freshnessPipeline(spark, root, "openmrs_", tables.map(_ -> "event_ts"),
+      to_timestamp(lit(cutoff)), out)
+
+  private def ppeRun(root: String, tables: Seq[(String, Option[String])],
+      out: String): Pipelines.RunReport = {
+    val dest = spark.range(1).select(lit(-1).as("site_id"),
+      lit("obs").as("table_name"), lit(0L).as("record_count"))
+    Pipelines.reconciliationPipeline(spark, root, "openmrs_", tables, dest, out)
+  }
+
+  /** site/facility id -> the rows of a sink, by `key`. */
+  private def byKey(out: String, key: String, cols: String*): Map[Int, Seq[Any]] =
+    spark.read.parquet(out).filter(col(key) =!= -1).select(col(key) +: cols.map(col): _*)
+      .collect().map(r => r.getInt(0) -> r.toSeq.tail).toMap
+
+  test("fleet isolation: a source lacking the checked column is skipped whole, the others reported") {
+    val root = Files.createTempDirectory("fleet-iso").toString
+    Seq("openmrs_a", "openmrs_b", "openmrs_no_ts", "openmrs_no_voided").zipWithIndex.foreach {
+      case (src, i) =>
+        val obs = facts(5 + i)
+        val obsCols = src match {
+          case "openmrs_no_ts"     => Seq("id", "voided")     // DCC cannot date it
+          case "openmrs_no_voided" => Seq("id", "event_ts")   // PPE cannot filter it
+          case _                   => obs.columns.toSeq
+        }
+        obs.select(obsCols.map(col): _*).write.parquet(s"$root/$src/obs")
+        facts(3 + i).write.parquet(s"$root/$src/encounter")
+    }
+    val out = Files.createTempDirectory("fleet-iso-out").toString
+    val dcc = dccRun(root, Seq("obs", "encounter"), s"$out/dcc")
+    assert(dcc.skipped.map(_.source) == Seq("openmrs_no_ts"))
+    assert(dcc.rowsWritten == 3 && dcc.sourcesTotal == 4)
+    assert(spark.read.parquet(s"$out/dcc").select("facility_name").as[String].collect().sorted
+      .toSeq == Seq("openmrs_a", "openmrs_b", "openmrs_no_voided"))
+
+    // encounter counts every row (no live-row column, the patient_state shape)
+    val ppe = ppeRun(root, Seq("obs" -> Some("voided"), "encounter" -> None), s"$out/ppe")
+    assert(ppe.skipped.map(_.source) == Seq("openmrs_no_voided"))
+    assert(ppe.telemetry == "3 out of 4 sources processed successfully")
+    val rows = spark.read.parquet(s"$out/ppe").filter($"site_id" =!= -1)
+      .select("site_id", "table_name", "record_count_source").collect()
+      .map(r => (r.getInt(0), r.getString(1)) -> r.getLong(2)).toMap
+    // live rows: n minus every third id
+    def live(n: Int) = (n - n / 3).toLong
+    assert(rows == Map(
+      (siteKey("openmrs_a"), "obs") -> live(5), (siteKey("openmrs_a"), "encounter") -> 3L,
+      (siteKey("openmrs_b"), "obs") -> live(6), (siteKey("openmrs_b"), "encounter") -> 4L,
+      (siteKey("openmrs_no_ts"), "obs") -> live(7), (siteKey("openmrs_no_ts"), "encounter") -> 5L))
+  }
+
+  test("fleet isolation: a source whose rows all fall after the cutoff keeps its DCC row, with nulls") {
+    val root = Files.createTempDirectory("fleet-late").toString
+    Seq("obs", "encounter").foreach { t =>
+      facts(4).write.parquet(s"$root/openmrs_a/$t")
+      Seq((1, ts("2022-05-01 00:00:00"), 0)).toDF("id", "event_ts", "voided")
+        .write.parquet(s"$root/openmrs_late/$t")
+    }
+    val out = Files.createTempDirectory("fleet-late-out").toString + "/dcc"
+    val report = dccRun(root, Seq("obs", "encounter"), out)
+    assert(report.rowsWritten == 2 && report.skipped.isEmpty)
+    val rows = byKey(out, "facility_id", "facility_name", "obs_max_date",
+      "encounter_max_date", "std_dev")
+    assert(rows(siteKey("openmrs_late")) == Seq("openmrs_late", null, null, null))
+    assert(rows(siteKey("openmrs_a")) ==
+      Seq("openmrs_a", java.sql.Date.valueOf("2020-05-10"), java.sql.Date.valueOf("2020-05-10"), 0.0))
+  }
+
+  test("fleet attribution: sources named with a space or as another's prefix get their own ids and rows") {
+    val root = Files.createTempDirectory("fleet-names").toString
+    val names = Seq("openmrs_north", "openmrs_north site", "openmrs_a", "openmrs_ab")
+    names.zipWithIndex.foreach { case (src, i) =>
+      facts(2 + i, day = 1 + i).write.parquet(s"$root/$src/obs")
+    }
+    val out = Files.createTempDirectory("fleet-names-out").toString
+    val dcc = dccRun(root, Seq("obs"), s"$out/dcc")
+    assert(dcc.rowsWritten == 4 && dcc.skipped.isEmpty)
+    val dccRows = byKey(s"$out/dcc", "facility_id", "facility_name", "obs_max_date")
+    assert(dccRows == names.zipWithIndex.map { case (src, i) =>
+      // ids 1..n+2 land in months 2..n+3; the latest month is the max
+      siteKey(src) -> Seq(src, java.sql.Date.valueOf(f"2020-${3 + i}%02d-${1 + i}%02d"))
+    }.toMap)
+    val ppe = ppeRun(root, Seq("obs" -> Some("voided")), s"$out/ppe")
+    assert(ppe.rowsWritten == 5 && ppe.skipped.isEmpty) // + the destination-only row
+    assert(byKey(s"$out/ppe", "site_id", "record_count_source") == names.zipWithIndex.map {
+      case (src, i) => siteKey(src) -> Seq((2 + i - (2 + i) / 3).toLong)
+    }.toMap)
+  }
+
+  test("fleet attribution: a table partitioned into subdirectories, or stored as one file, is read whole") {
+    val root = Files.createTempDirectory("fleet-parts").toString
+    facts(6).write.parquet(s"$root/openmrs_a/obs")
+    facts(9).withColumn("ward", $"id" % 2).write.partitionBy("ward")
+      .parquet(s"$root/openmrs_b/obs")
+    val single = Files.createTempDirectory("fleet-file").toString + "/t"
+    facts(12).coalesce(1).write.parquet(single)
+    val part = new java.io.File(single).listFiles().filter(_.getName.endsWith(".parquet")).head
+    Files.createDirectories(java.nio.file.Paths.get(s"$root/openmrs_c"))
+    Files.move(part.toPath, java.nio.file.Paths.get(s"$root/openmrs_c/obs"))
+    val out = Files.createTempDirectory("fleet-parts-out").toString
+    val ppe = ppeRun(root, Seq("obs" -> Some("voided")), s"$out/ppe")
+    assert(ppe.skipped.isEmpty)
+    assert(byKey(s"$out/ppe", "site_id", "record_count_source") == Map(
+      siteKey("openmrs_a") -> Seq(4L), siteKey("openmrs_b") -> Seq(6L),
+      siteKey("openmrs_c") -> Seq(8L)))
+  }
+
+  test("fleet isolation: a source storing a checked column as another type is skipped with a reason") {
+    val root = Files.createTempDirectory("fleet-types").toString
+    facts(4).write.parquet(s"$root/openmrs_a/obs")
+    facts(5).select($"id", $"event_ts".cast("string").as("event_ts"), $"voided")
+      .write.parquet(s"$root/openmrs_b/obs")                      // DCC cannot share a scan
+    facts(6).select($"id", $"event_ts", $"voided".cast("string").as("voided"))
+      .write.parquet(s"$root/openmrs_c/obs")                      // PPE cannot share a scan
+    val out = Files.createTempDirectory("fleet-types-out").toString
+    val dcc = dccRun(root, Seq("obs"), s"$out/dcc")
+    assert(dcc.skipped.map(_.source) == Seq("openmrs_b") && dcc.rowsWritten == 2)
+    assert(dcc.skipped.head.reason.contains("event_ts") &&
+      dcc.skipped.head.reason.contains("string"), dcc.skipped.head.reason)
+    val ppe = ppeRun(root, Seq("obs" -> Some("voided")), s"$out/ppe")
+    assert(ppe.skipped.map(_.source) == Seq("openmrs_c"))
+    assert(ppe.skipped.head.reason.contains("voided"), ppe.skipped.head.reason)
+    assert(byKey(s"$out/ppe", "site_id", "record_count_source") ==
+      Map(siteKey("openmrs_a") -> Seq(3L), siteKey("openmrs_b") -> Seq(4L)))
+  }
+
+  /** Spark jobs one DCC + PPE run starts over a fleet of `n` sources
+    * (the last one misses `orders`, so both flows plan and skip alike
+    * at every size). */
+  private def fleetJobs(n: Int): Int = {
+    val root = Files.createTempDirectory(s"fleet-$n").toString
+    val tables = Seq("obs", "encounter", "orders")
+    (1 to n).foreach { i =>
+      (if (i == n) tables.init else tables).foreach { t =>
+        facts(10 + i).write.parquet(s"$root/openmrs_s$i/$t")
+      }
+    }
+    val out = Files.createTempDirectory(s"fleet-$n-out").toString
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.graftbridge.TestBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val dcc = dccRun(root, tables, s"$out/dcc")
+      val ppe = ppeRun(root, tables.map(_ -> Some("voided")), s"$out/ppe")
+      assert(dcc.skipped.map(_.source) == Seq(s"openmrs_s$n") && dcc.rowsWritten == n - 1)
+      assert(ppe.skipped == dcc.skipped)
+      org.apache.spark.graftbridge.TestBus.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    jobs.get
+  }
+
+  test("fleet scaling: one DCC + PPE run starts as many Spark jobs at 9 sources as at 3") {
+    fleetJobs(3) // warm-up: first-use jobs of the session are not the fleet's
+    val (small, large) = (fleetJobs(3), fleetJobs(9))
+    assert(small == large, s"$small Spark jobs at 3 sources, $large at 9")
+  }
+
   test("SQL-callable checks: CALL graft.<check> runs the operator layer from pure SQL text") {
     // the reference's users drive everything by SQL strings — this is
     // that surface restored: inputs are CATALOG names (temp views
