@@ -11,9 +11,10 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Cast
 import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
 
 /** Multi-source fan-out with per-source fault isolation (SURVEY.md
   * S4/S5/S6, reference: data_consistency_checks.py:85-116).
@@ -28,8 +29,10 @@ import org.apache.spark.sql.types.StructType
   *    driver-side check per (source, table) against the file system
   *    and the parquet footers decides which sources are planned, with
   *    no Spark job; each table is then read by ONE scan over every
-  *    planned source, rows attributed to their source as data. The
-  *    plan and its jobs grow with the tables, not with the fleet.
+  *    planned source (one per stored-type group when the files disagree
+  *    on a checked column's type), rows attributed to their source as
+  *    data. The plan and its jobs grow with the tables, not with the
+  *    fleet.
   *  - [[fanOut]] (JDBC sources): one lazy plan per source, analysed
   *    under Try (a missing table surfaces as an AnalysisException),
   *    failed sources recorded and skipped, the survivors unioned.
@@ -106,40 +109,48 @@ object FanOut {
   /** The column a [[TablePlan.scan]] attributes each row's source in. */
   val SourceColumn = "source_schema"
 
-  /** One table's shared scan: the required columns as the first planned
-    * source stores them, and each planned source's table path. */
-  final case class TableScan(table: String, schema: StructType, paths: Seq[(String, Path)])
+  /** One table's shared read: the required columns at their planned
+    * types (`schema`), and the planned sources' table paths grouped by
+    * the types their files store those columns as, one parquet scan per
+    * group (one group when the fleet agrees on the types). */
+  final case class TableScan(
+      table: String, schema: StructType, groups: Seq[(StructType, Seq[(String, Path)])])
 
   /** The planned sources (discovery order), the skipped ones with their
     * reasons (discovery order), and one scan per table. */
   final case class TablePlan(
       sources: Seq[String], skipped: Seq[SkipRecord], scans: Seq[TableScan]) {
 
-    /** One parquet scan of `table` over every planned source, each row
-      * tagged with its source in [[SourceColumn]]. The source comes from
-      * the row's `_metadata.file_path` (a URI-escaped string) matched
-      * against each source's qualified table-path URI as a prefix, so
-      * partition subdirectories and escaped names attribute correctly.
-      * The schema is given, so the read infers nothing (no Spark job);
-      * it holds the required columns only. Past
-      * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32)
-      * sources, Spark lists the paths with one job per scan. */
+    /** `table` read over every planned source, one parquet scan per type
+      * group (a group stored in narrower types is cast up to the planned
+      * ones), each row tagged with its source in [[SourceColumn]]. The
+      * source comes from the row's `_metadata.file_path` (a URI-escaped
+      * string) matched against each source's qualified table-path URI as
+      * a prefix, so partition subdirectories and escaped names attribute
+      * correctly; a row matching no source fails the scan rather than
+      * reporting under a made-up source. The schemas are given, so the
+      * read infers nothing (no Spark job); it holds the required columns
+      * only. Past `spark.sql.sources.parallelPartitionDiscovery.threshold`
+      * (32) sources, Spark lists the paths with one job per scan. */
     def scan(spark: SparkSession, table: String): DataFrame = {
       val t = scans.find(_.table == table).getOrElse(
         throw new IllegalArgumentException(s"table '$table' was not planned"))
-      val file = col("_metadata.file_path")
-      val hits = t.paths.map { case (src, path) =>
-        // a table stored as one file matches whole
-        spellings(path.toUri).map(u => file.startsWith(s"$u/") || file === u).reduce(_ || _) ->
-          lit(src)
-      }
-      val source = hits.tail.foldLeft(when(hits.head._1, hits.head._2)) {
-        case (c, (hit, src)) => c.when(hit, src)
-      }
-      spark.read.schema(t.schema)
-        .option("recursiveFileLookup", "true") // no partition inference across sources
-        .parquet(t.paths.map(_._2.toString): _*)
-        .withColumn(SourceColumn, source)
+      val file = regexp_replace(col("_metadata.file_path"), LocalUri, "file:/")
+      t.groups.map { case (stored, paths) =>
+        val hits = paths.map { case (src, path) =>
+          val uri = path.toUri.toString.replaceFirst(LocalUri, "file:/")
+          // a table stored as one file matches whole
+          (file.startsWith(s"$uri/") || file === uri) -> lit(src)
+        }
+        val source = hits.tail.foldLeft(when(hits.head._1, hits.head._2)) {
+          case (c, (hit, src)) => c.when(hit, src)
+        }.otherwise(raise_error(concat(lit("unattributed file "), col("_metadata.file_path"))))
+        spark.read.schema(stored)
+          .option("recursiveFileLookup", "true") // no partition inference across sources
+          .parquet(paths.map(_._2.toString): _*)
+          .select(t.schema.fields.toSeq.map(f => col(f.name).cast(f.dataType).as(f.name)) :+
+            source.as(SourceColumn): _*)
+      }.reduce(_ union _)
     }
   }
 
@@ -147,12 +158,21 @@ object FanOut {
     * per-table scan can read: a source is planned when, for every
     * `(table, requiredColumns)`, its `root/source/table` path exists,
     * holds a data file, and the first data file's parquet footer has the
-    * required columns (resolved as the session resolves names) with the
-    * same Spark type as in the first planned source. A source failing
-    * any check is skipped whole, with the reason — the skip set the
-    * per-source analysis gave, plus a type mismatch, which would fail
-    * the shared scan at run time. A missing column is never null-filled.
-    * An unreadable footer propagates, as a failing read did before.
+    * required columns (resolved as the session resolves names) in types
+    * that widen to the planned ones. A source failing any check is
+    * skipped whole, with the reason — the skip set the per-source
+    * analysis gave, plus two the shared scan needs:
+    *
+    *  - a checked column that does not widen (`Cast.canUpCast`, never to
+    *    a string) to its planned type, the type the most sources' files
+    *    widen to (ties to the name that sorts first), so the odd source
+    *    is skipped whatever its name;
+    *  - a checked column held only as a partition directory (`voided=0/`):
+    *    the scan lists files recursively, without partition inference,
+    *    so it would read the column as null.
+    *
+    * A missing column is never null-filled. An unreadable footer
+    * propagates, as a failing read did before.
     */
   def planTables(
       spark: SparkSession, root: String, sources: Seq[String],
@@ -163,20 +183,28 @@ object FanOut {
     val tables = required.groupBy(_._1).view.mapValues(_.flatMap(_._2).distinct).toMap
     val order = required.map(_._1).distinct
 
-    def probe(src: String, table: String): Either[String, (Path, StructType)] = {
+    // a source's table: its qualified path and the stored type of each required column
+    def probe(src: String, table: String): Either[String, (Path, Seq[DataType])] = {
       val path = new Path(new Path(root, src), table)
       val fs = path.getFileSystem(hadoopConf)
       firstDataFile(fs, path) match {
         case None => Left(s"table '$table' not found or holds no data file")
         case Some(file) =>
+          val qualified = fs.makeQualified(path)
           val footer = readSchema(hadoopConf, file)
           val fields = footer.getFields.asScala.toSeq
           val found = tables(table).map(c => c -> fields.find(f => conf.resolver(f.getName, c)))
           found.collectFirst { case (c, None) => c } match {
-            case Some(c) => Left(s"table '$table' has no column '$c' (${file.getPath.getName})")
+            case Some(c) =>
+              val partition = Iterator.iterate(file.getPath.getParent)(_.getParent)
+                .takeWhile(_.depth > qualified.depth).map(_.getName)
+                .find(_.split("=", 2) match { case Array(k, _) => conf.resolver(k, c); case _ => false })
+              Left(partition.fold(s"table '$table' has no column '$c' (${file.getPath.getName})")(
+                dir => s"table '$table' holds column '$c' only as partition directory '$dir', " +
+                  "which the shared scan does not read"))
             case None =>
               val cols = new MessageType(footer.getName, found.flatMap(_._2).asJava)
-              try Right(fs.makeQualified(path) -> toSpark.convert(cols))
+              try Right(qualified -> toSpark.convert(cols).fields.map(_.dataType).toSeq)
               catch { case e: AnalysisException => // a type Spark cannot read
                 Left(s"table '$table': ${e.getSimpleMessage.linesIterator.next()}")
               }
@@ -186,32 +214,52 @@ object FanOut {
 
     // first failing table, in `required` order, names the skip reason
     val probed = sources.map { src =>
-      src -> order.foldLeft[Either[String, Map[String, (Path, StructType)]]](Right(Map.empty)) {
+      src -> order.foldLeft[Either[String, Map[String, (Path, Seq[DataType])]]](Right(Map.empty)) {
         case (Right(ok), t) => probe(src, t).map(r => ok + (t -> r))
         case (left, _) => left
       }
     }
-    val reference = probed.collectFirst { case (_, Right(ok)) => ok.view.mapValues(_._2).toMap }
+    val stored = probed.collect { case (_, Right(ok)) => ok }
+    val planned: Map[String, Seq[DataType]] = if (stored.isEmpty) Map.empty else order.map { t =>
+      t -> tables(t).indices.map { i =>
+        val types = stored.map(_(t)._2(i))
+        types.distinct.sortBy(to => (-types.count(widens(_, to)), to.simpleString)).head
+      }
+    }.toMap
     val checked = probed.map {
       case (src, Right(ok)) =>
         val mismatch = for {
-          ref <- reference.toSeq
           t <- order
-          (theirs, ours) <- ref(t).fields.zip(ok(t)._2.fields)
-          if theirs.dataType != ours.dataType
-        } yield s"table '$t' column '${ours.name}' is ${ours.dataType.simpleString}, " +
-          s"not ${theirs.dataType.simpleString} as in the first planned source"
+          (c, (from, to)) <- tables(t).zip(ok(t)._2.zip(planned(t)))
+          if !widens(from, to)
+        } yield s"table '$t' column '$c' is ${from.simpleString}, which does not widen to " +
+          s"${to.simpleString}, the type the most sources' files widen to"
         src -> mismatch.headOption.toLeft(ok)
       case other => other
     }
+    def schema(t: String, types: Seq[DataType]) =
+      StructType(tables(t).zip(types).map { case (c, d) => StructField(c, d) })
     TablePlan(
       checked.collect { case (src, Right(_)) => src },
       checked.collect { case (src, Left(reason)) => SkipRecord(src, reason) },
-      order.flatMap { t =>
-        val planned = checked.collect { case (src, Right(ok)) => src -> ok(t)._1 }
-        reference.map(ref => TableScan(t, ref(t), planned))
+      if (stored.isEmpty) Nil else order.map { t =>
+        val reads = checked.collect { case (src, Right(ok)) => (src, ok(t)._1, ok(t)._2) }
+        TableScan(t, schema(t, planned(t)), reads.map(_._3).distinct.map { types =>
+          schema(t, types) -> reads.collect { case (src, path, `types`) => src -> path }
+        })
       })
   }
+
+  /** A column stored as `from` can be read as `to`: the same type or a
+    * lossless up-cast, never to a string (a scan cannot read, say, a
+    * timestamp column as a string). */
+  private def widens(from: DataType, to: DataType): Boolean =
+    from == to || (to != StringType && Cast.canUpCast(from, to))
+
+  /** Hadoop writes a local URI without authority as `file:/p` for a
+    * listed directory's children and as `file:///p` for a qualified path;
+    * both sides of a source match are normalised to `file:/p`. */
+  private val LocalUri = "^file:///"
 
   /** The first data file under `path` in a depth-first walk in name
     * order (for a flat table directory, the file Spark's own inference
@@ -226,13 +274,6 @@ object FanOut {
         .flatMap(first).nextOption()
     Try(fs.getFileStatus(path)).toOption.flatMap(first)
   }
-
-  /** The spellings a file URI can take in `_metadata.file_path`: Hadoop
-    * writes a URI without authority as `file:/p` for a listed directory's
-    * children and as `file:///p` for a qualified path. */
-  private def spellings(uri: java.net.URI): Seq[String] =
-    if (uri.getScheme == null || uri.getRawAuthority != null) Seq(uri.toString)
-    else Seq(s"${uri.getScheme}:${uri.getRawPath}", s"${uri.getScheme}://${uri.getRawPath}")
 
   private def readSchema(conf: Configuration, file: FileStatus): MessageType = {
     val options = HadoopReadOptions.builder(conf)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.GraftFunctionRegistry
+import graft.sources.FanOut
 
 class PipelinesSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -205,6 +206,62 @@ class PipelinesSpec extends AnyFunSuite {
     assert(ppe.skipped.head.reason.contains("voided"), ppe.skipped.head.reason)
     assert(byKey(s"$out/ppe", "site_id", "record_count_source") ==
       Map(siteKey("openmrs_a") -> Seq(3L), siteKey("openmrs_b") -> Seq(4L)))
+  }
+
+  test("fleet isolation: the odd type is skipped even when its source sorts first; int widens to bigint") {
+    val root = Files.createTempDirectory("fleet-widen").toString
+    facts(4).select($"id", $"event_ts".cast("string").as("event_ts"), ($"voided" === 1).as("voided"))
+      .write.parquet(s"$root/openmrs_a/obs")                      // no other source shares its types
+    facts(5).write.parquet(s"$root/openmrs_b/obs")                // int voided
+    facts(7).withColumn("voided", $"voided".cast("bigint")).write.parquet(s"$root/openmrs_c/obs")
+    val out = Files.createTempDirectory("fleet-widen-out").toString
+    val dcc = dccRun(root, Seq("obs"), s"$out/dcc")
+    assert(dcc.skipped.map(_.source) == Seq("openmrs_a") && dcc.rowsWritten == 2, dcc.skipped)
+    assert(byKey(s"$out/dcc", "facility_id", "obs_max_date") == Map(
+      siteKey("openmrs_b") -> Seq(java.sql.Date.valueOf("2020-06-10")),
+      siteKey("openmrs_c") -> Seq(java.sql.Date.valueOf("2020-08-10"))))
+
+    val plan = FanOut.planTables(spark, root, FanOut.discoverSources(root, "openmrs_"),
+      Seq("obs" -> Seq("voided")))
+    assert(plan.scans.map(_.schema.map(_.dataType.simpleString)) == Seq(Seq("bigint")))
+    assert(plan.scans.head.groups.map(_._2.map(_._1)) == Seq(Seq("openmrs_b"), Seq("openmrs_c")))
+    val ppe = ppeRun(root, Seq("obs" -> Some("voided")), s"$out/ppe")
+    assert(ppe.skipped.map(_.source) == Seq("openmrs_a"))
+    assert(ppe.skipped.head.reason.contains("boolean"), ppe.skipped.head.reason)
+    assert(byKey(s"$out/ppe", "site_id", "record_count_source") ==
+      Map(siteKey("openmrs_b") -> Seq(4L), siteKey("openmrs_c") -> Seq(5L)))
+  }
+
+  test("fleet isolation: a table holding the checked column only as a partition directory is skipped") {
+    val root = Files.createTempDirectory("fleet-partcol").toString
+    facts(4).write.parquet(s"$root/openmrs_a/obs")
+    facts(5).write.partitionBy("voided").parquet(s"$root/openmrs_b/obs")
+    val out = Files.createTempDirectory("fleet-partcol-out").toString + "/ppe"
+    val ppe = ppeRun(root, Seq("obs" -> Some("voided")), out)
+    assert(ppe.skipped.map(_.source) == Seq("openmrs_b"))
+    assert(ppe.skipped.head.reason.contains("partition directory 'voided=0'"), ppe.skipped.head.reason)
+    assert(byKey(out, "site_id", "record_count_source") == Map(siteKey("openmrs_a") -> Seq(3L)))
+  }
+
+  test("fleet attribution: every scanned row gets its source; a file matching no source fails the scan") {
+    val root = Files.createTempDirectory("fleet-attr").toString
+    val sizes = Map("openmrs_x y" -> 3, "openmrs_x" -> 4)
+    sizes.foreach { case (src, n) => facts(n).write.parquet(s"$root/$src/obs") }
+    val plan = FanOut.planTables(spark, root, FanOut.discoverSources(root, "openmrs_"),
+      Seq("obs" -> Seq("voided")))
+    def bySource(p: FanOut.TablePlan) =
+      p.scan(spark, "obs").groupBy(FanOut.SourceColumn).count().as[(String, Long)].collect().toMap
+    assert(bySource(plan) == sizes.view.mapValues(_.toLong).toMap)
+
+    // the same files under a path spelled unlike their `_metadata.file_path`
+    val cwd = java.nio.file.Paths.get("").toAbsolutePath
+    val relative = new org.apache.hadoop.fs.Path(
+      cwd.relativize(java.nio.file.Paths.get(s"$root/openmrs_x/obs")).toString)
+    val obs = plan.scans.head
+    val stray = plan.copy(scans = Seq(obs.copy(groups = Seq(obs.groups.head._1 -> Seq("openmrs_x" -> relative)))))
+    val e = intercept[Exception](bySource(stray))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("unattributed file")), e)
   }
 
   /** Spark jobs one DCC + PPE run starts over a fleet of `n` sources
