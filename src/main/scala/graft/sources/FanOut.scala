@@ -239,10 +239,11 @@ object FanOut {
     }
     def schema(t: String, types: Seq[DataType]) =
       StructType(tables(t).zip(types).map { case (c, d) => StructField(c, d) })
+    val plannedSources = checked.collect { case (src, Right(_)) => src }
     TablePlan(
-      checked.collect { case (src, Right(_)) => src },
+      plannedSources,
       checked.collect { case (src, Left(reason)) => SkipRecord(src, reason) },
-      if (stored.isEmpty) Nil else order.map { t =>
+      if (plannedSources.isEmpty) Nil else order.map { t =>
         val reads = checked.collect { case (src, Right(ok)) => (src, ok(t)._1, ok(t)._2) }
         TableScan(t, schema(t, planned(t)), reads.map(_._3).distinct.map { types =>
           schema(t, types) -> reads.collect { case (src, path, `types`) => src -> path }
