@@ -11,9 +11,9 @@ import graft.sources.{FanOut, Sinks}
 
 /** The reference's two entry-point flows (SURVEY.md §3), end to end:
   * multi-source discovery → per-source check with skip → one scan per
-  * table over every planned source → grouped check → report → sink
-  * with verify-count. Each run returns the persisted row count and the
-  * skip/telemetry records the reference printed as log lines
+  * table over every planned source → one grouped aggregation → report
+  * → sink with verify-count. Each run returns the persisted row count
+  * and the skip/telemetry records the reference printed as log lines
   * (data_consistency_checks.py:146-147, 166-168).
   *
   * Where the reference visits sources in a sequential Python loop and
@@ -21,9 +21,11 @@ import graft.sources.{FanOut, Sinks}
   * plan: [[FanOut.planTables]] checks each source on the driver (file
   * system and parquet footers, no Spark job), each table is read once
   * over all planned sources with the source as a column, and the
-  * checks aggregate per source with the grouped operators. The plan
-  * and its Spark jobs grow with the tables, not with the sources; the
-  * only materialization is the sink write and its read-back.
+  * tables' rows are unioned into ONE aggregation per check. The sink's
+  * read-back sums the written files' parquet footers on the driver.
+  * So the Spark jobs are fixed per flow: the aggregation's shuffle and
+  * the write in DCC, plus the destination side's shuffle in PPE —
+  * whatever the number of sources or tables.
   */
 object Pipelines {
 
@@ -41,11 +43,10 @@ object Pipelines {
 
   /** DCC freshness-consistency pipeline over a directory of source
     * "schemas" (each a subdirectory holding one parquet per table):
-    * discover → per-source loading status (count + max date per fact
-    * table, grouped by facility over one scan per table) → pivot wide →
-    * ordinal stddev score → replace-sink. Every planned source gets a
-    * report row, also one whose rows all fall after the cutoff (null
-    * max dates and score).
+    * discover → per-source max date per fact table, wide, in one
+    * aggregation over the tables' scans → ordinal stddev score →
+    * replace-sink. Every planned source gets a report row, also one
+    * whose rows all fall after the cutoff (null max dates and score).
     */
   def freshnessPipeline(
       spark: SparkSession,
@@ -60,25 +61,22 @@ object Pipelines {
     val written =
       if (plan.sources.isEmpty) 0L
       else {
-        val long = Freshness.groupedLoadingStatus(sourceKey(col(FanOut.SourceColumn)),
+        val wide = Freshness.wideMaxDates(Seq(col(FanOut.SourceColumn).as("facility_name")),
           factTables.map { case (t, tsCol) =>
             FreshnessSpec(t, plan.scan(spark, t), col(tsCol), cutoff)
-          })
-        val facilities = spark.createDataset(plan.sources)(Encoders.STRING)
-          .select(sourceKey(col("value")).as("facility_id"), col("value").as("facility_name"))
-        val tables = factTables.map(_._1)
-        val wide = Freshness.pivotMaxDates(
-          facilities.join(long, Seq("facility_id"), "left"),
-          Seq("facility_id", "facility_name"), tables)
+          },
+          keep = Some(spark.createDataset(plan.sources)(Encoders.STRING).toDF("facility_name")))
         val report = Freshness.freshnessReport(
-          wide, Seq("facility_id", "facility_name"), tables, current_date())
+          wide.withColumn("facility_id", sourceKey(col("facility_name"))),
+          Seq("facility_id", "facility_name"), factTables.map(_._1), current_date())
         Sinks.writeReplace(report, outPath) // S7 + S9 verify read-back
       }
     RunReport(written, sources.size, plan.skipped)
   }
 
-  /** PPE reconciliation pipeline: source census (grouped by site over
-    * one scan per table, soft-delete filtered) vs destination census →
+  /** PPE reconciliation pipeline: source census (one aggregation by
+    * site and table over the tables' scans, soft-delete filtered) vs
+    * destination census →
     * full outer join → variance → append-sink (accumulate-by-run-date
     * design, S8).
     */

@@ -8,16 +8,19 @@ import graft.functions.DqFunctions._
 /** The DCC "loading status" / freshness-consistency pipeline
   * (SURVEY.md §2/§3, reference: data_consistency_checks.py).
   *
-  * Spark-first re-expression: each per-table branch is a global
-  * aggregate (count + max event date, with a temporal sanity cutoff),
-  * the branches are UNION ALL'd into a long frame, pivoted wide by
-  * table, and scored with a row-wise sample stddev of the max-dates'
-  * day ordinals (data_consistency_checks.py:43-77, 125-141).
+  * Spark-first re-expression: per table, a count + max event date
+  * with a temporal sanity cutoff (a global aggregate per branch for
+  * one facility, [[loadingStatus]]), pivoted wide by table, and scored
+  * with a row-wise sample stddev of the max-dates' day ordinals
+  * (data_consistency_checks.py:43-77, 125-141).
   *
-  * Scale notes: each branch is a partial-aggregated scan (map-side
-  * combine, one row out per branch), so the union costs no shuffle
-  * beyond the per-branch final aggregation; the pivot runs over
-  * #facilities × #tables rows — trivially small at any data scale.
+  * Scale notes: the grouped forms ([[groupedLoadingStatus]],
+  * [[wideMaxDates]]) project each table's rows to (facility, table,
+  * date), union the projections and aggregate ONCE, partial-aggregated
+  * at the scans: one shuffle and one Spark job for any number of
+  * tables, and #facilities × #tables rows cross it. [[wideMaxDates]]
+  * goes straight to the wide frame, so the long frame's pivot (a
+  * second aggregation) is left to [[pivotMaxDates]]'s callers.
   */
 object Freshness {
 
@@ -61,26 +64,51 @@ object Freshness {
         "record_count", "max_date", "reporting_quarter")
   }
 
+  /** Every spec's rows before its cutoff (P2), projected to `keys`
+    * (named columns over each spec's frame), `table_name` (P5) and the
+    * event date `max_date` (E2) and unioned: the input of one
+    * aggregation over all tables. */
+  private def datedRows(keys: Seq[Column], specs: Seq[FreshnessSpec]): DataFrame =
+    specs.map { spec =>
+      spec.df
+        .filter(spec.eventTs < spec.cutoff)
+        .select(keys :+ lit(spec.tableName).as("table_name") :+
+          to_date(spec.eventTs).as("max_date"): _*)
+    }.reduce(_ unionByName _)
+
   /** Grouped (per-facility) variant of the loading status — the S4
     * fan-out re-expressed as one distributed grouped aggregation
-    * instead of the reference's sequential per-schema loop.
+    * instead of the reference's sequential per-schema loop: one group
+    * by (facility, table) over the union of the tables' rows.
     */
   def groupedLoadingStatus(
       facilityKey: Column,
       specs: Seq[FreshnessSpec]): DataFrame =
-    specs.map { spec =>
-      spec.df
-        .filter(spec.eventTs < spec.cutoff)
-        .groupBy(facilityKey.cast("int").as("facility_id"))
-        .agg(
-          count(lit(1)).as("record_count"),
-          max(to_date(spec.eventTs)).as("max_date"))
-        .select(
-          col("facility_id"),
-          lit(spec.tableName).as("table_name"),
-          col("record_count"),
-          col("max_date"))
-    }.reduce(_ unionByName _)
+    datedRows(Seq(facilityKey.cast("int").as("facility_id")), specs)
+      .groupBy("facility_id", "table_name")
+      .agg(
+        count(lit(1)).as("record_count"),
+        max("max_date").as("max_date"))
+
+  /** The wide frame [[pivotMaxDates]] makes of the grouped loading
+    * status, straight from the tables' rows: one row per `keys` value,
+    * one `<table>_max_date` column per spec, each a
+    * `max(when(table_name = t, date))` of one aggregation. `keep` (rows
+    * of the key columns) is unioned in dateless, so each of its keys
+    * gets a row with null dates even when none of its rows falls
+    * before a cutoff.
+    */
+  def wideMaxDates(
+      keys: Seq[Column],
+      specs: Seq[FreshnessSpec],
+      keep: Option[DataFrame] = None): DataFrame = {
+    val rows = datedRows(keys, specs)
+    val maxDates = specs.map(s =>
+      max(when(col("table_name") === s.tableName, col("max_date"))).as(s"${s.tableName}_max_date"))
+    keep.fold(rows)(rows.unionByName(_, allowMissingColumns = true))
+      .groupBy(rows.columns.toSeq.dropRight(2).map(col): _*)
+      .agg(maxDates.head, maxDates.tail: _*)
+  }
 
   /** Pivot the long frame wide: one row per facility, one
     * `<table>_max_date` column per table (A4 + P8). Explicit pivot

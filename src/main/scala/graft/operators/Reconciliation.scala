@@ -13,10 +13,12 @@ import org.apache.spark.sql.functions._
   * (site_id, table_name) (PPE:229-237) and a null-propagating
   * variance = source − destination (PPE:239).
   *
-  * Scale notes: each census branch partial-aggregates at the scan
-  * (one row per site per table crosses the shuffle); both join sides
-  * are ≤ sites × tables rows, so the reconciliation join is always
-  * broadcastable no matter how large the underlying fact data is.
+  * Scale notes: the census unions every table's (site, table)
+  * projection into one aggregation, partial-aggregated at the scans
+  * (one row per site per table per partition crosses its one
+  * shuffle); both join sides are ≤ sites × tables rows, so the
+  * reconciliation join is always broadcastable no matter how large
+  * the underlying fact data is.
   */
 object Reconciliation {
 
@@ -30,28 +32,21 @@ object Reconciliation {
       siteId: Column,
       liveRow: Option[Column])
 
-  /** Per-site grouped count for one table (A2/A3 + P3): zero rows for
-    * an empty/fully-filtered table — empty groups don't exist; the
-    * outer join downstream is what surfaces the gap (SURVEY.md §2.8.1).
-    */
-  def census(spec: CensusSpec): DataFrame = {
-    val filtered = spec.liveRow.fold(spec.df)(spec.df.filter)
-    filtered
-      .groupBy(spec.siteId.cast("int").as("site_id"))
-      .agg(count(lit(1)).as("record_count"))
-      .select(
-        col("site_id"),
-        lit(spec.tableName).as("table_name"),   // P5 branch tag
-        col("record_count"))
-  }
-
-  /** Multi-table census: union of per-table branches (U2/U3). The
-    * reference hand-split its destination union "to optimize"
-    * (PPE:158); under Spark the branches are independent parallel
-    * stages, so a single unioned plan is already optimal.
+  /** Multi-table census (A2/A3 + P3, U2/U3): each table's live rows
+    * projected to (site_id, table_name), unioned, and counted in ONE
+    * group by (site_id, table_name). A table or site with no live row
+    * has no row — empty groups don't exist; the outer join downstream
+    * is what surfaces the gap (SURVEY.md §2.8.1). The reference
+    * hand-split its destination union "to optimize" (PPE:158); here
+    * the union feeds one aggregation, so N tables cost one shuffle.
     */
   def censusUnion(specs: Seq[CensusSpec]): DataFrame =
-    specs.map(census).reduce(_ unionByName _)
+    specs.map { spec =>
+      spec.liveRow.fold(spec.df)(spec.df.filter)
+        .select(spec.siteId.cast("int").as("site_id"), lit(spec.tableName).as("table_name")) // P5 branch tag
+    }.reduce(_ unionByName _)
+      .groupBy("site_id", "table_name")
+      .agg(count(lit(1)).as("record_count"))
 
   /** Full outer reconciliation (J1): USING-join on the composite key
     * coalesces key columns (pandas `on=` semantics); the overlapping

@@ -86,12 +86,14 @@ object ParityQueries {
     val lc = lineitem
       .join(orders, col("l_orderkey") === col("o_orderkey"))
       .join(customer, col("o_custkey") === col("c_custkey"))
-    Freshness.groupedLoadingStatus(col("c_nationkey"), Seq(
-      FreshnessSpec("orders", oc, col("o_orderdate"), cut(CutTpch)),
-      FreshnessSpec("lineitem", lc, col("l_shipdate"), cut(CutTpch))))
-      .unionByName(Freshness.groupedLoadingStatus(pmod(col("user_id"), lit(25)), Seq(
-        FreshnessSpec("events", Tables.eventsBefore(spark, d, CutEvents), col("ts"),
-          cut(CutEvents)))))
+    // each branch names its facility `site`, so one aggregation folds all three
+    Freshness.groupedLoadingStatus(col("site"), Seq(
+      FreshnessSpec("orders", oc.withColumn("site", col("c_nationkey")),
+        col("o_orderdate"), cut(CutTpch)),
+      FreshnessSpec("lineitem", lc.withColumn("site", col("c_nationkey")),
+        col("l_shipdate"), cut(CutTpch)),
+      FreshnessSpec("events", Tables.eventsBefore(spark, d, CutEvents)
+        .withColumn("site", pmod(col("user_id"), lit(25))), col("ts"), cut(CutEvents))))
   }
 
   val q02Sql: String =

@@ -3,12 +3,7 @@ package graft.sources
 import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Success, Try}
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.parquet.HadoopReadOptions
-import org.apache.parquet.format.converter.ParquetMetadataConverter
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Cast
@@ -157,12 +152,16 @@ object FanOut {
   /** Decide, on the driver and with no Spark job, which sources a
     * per-table scan can read: a source is planned when, for every
     * `(table, requiredColumns)`, its `root/source/table` path exists,
-    * holds a data file, and the first data file's parquet footer has the
+    * holds a data file, and every data file's parquet footer has the
     * required columns (resolved as the session resolves names) in types
     * that widen to the planned ones. A source failing any check is
     * skipped whole, with the reason — the skip set the per-source
-    * analysis gave, plus two the shared scan needs:
+    * analysis gave, plus three the shared scan needs:
     *
+    *  - files of one table that store a checked column in different
+    *    types: the scan reads a source's files under one schema, so the
+    *    odd file would fail it at run time, and every source's report
+    *    with it;
     *  - a checked column that does not widen (`Cast.canUpCast`, never to
     *    a string) to its planned type, the type the most sources' files
     *    widen to (ties to the name that sorts first), so the odd source
@@ -187,27 +186,43 @@ object FanOut {
     def probe(src: String, table: String): Either[String, (Path, Seq[DataType])] = {
       val path = new Path(new Path(root, src), table)
       val fs = path.getFileSystem(hadoopConf)
-      firstDataFile(fs, path) match {
-        case None => Left(s"table '$table' not found or holds no data file")
-        case Some(file) =>
-          val qualified = fs.makeQualified(path)
-          val footer = readSchema(hadoopConf, file)
-          val fields = footer.getFields.asScala.toSeq
-          val found = tables(table).map(c => c -> fields.find(f => conf.resolver(f.getName, c)))
-          found.collectFirst { case (c, None) => c } match {
-            case Some(c) =>
-              val partition = Iterator.iterate(file.getPath.getParent)(_.getParent)
-                .takeWhile(_.depth > qualified.depth).map(_.getName)
-                .find(_.split("=", 2) match { case Array(k, _) => conf.resolver(k, c); case _ => false })
-              Left(partition.fold(s"table '$table' has no column '$c' (${file.getPath.getName})")(
-                dir => s"table '$table' holds column '$c' only as partition directory '$dir', " +
-                  "which the shared scan does not read"))
-            case None =>
-              val cols = new MessageType(footer.getName, found.flatMap(_._2).asJava)
-              try Right(qualified -> toSpark.convert(cols).fields.map(_.dataType).toSeq)
-              catch { case e: AnalysisException => // a type Spark cannot read
-                Left(s"table '$table': ${e.getSimpleMessage.linesIterator.next()}")
+      val qualified = fs.makeQualified(path)
+      // one file's stored types of the required columns
+      def stored(file: FileStatus): Either[String, Seq[DataType]] = {
+        val footer = ParquetFooters.footer(hadoopConf, file).getFileMetaData.getSchema
+        val fields = footer.getFields.asScala.toSeq
+        val found = tables(table).map(c => c -> fields.find(f => conf.resolver(f.getName, c)))
+        found.collectFirst { case (c, None) => c } match {
+          case Some(c) =>
+            val partition = Iterator.iterate(file.getPath.getParent)(_.getParent)
+              .takeWhile(_.depth > qualified.depth).map(_.getName)
+              .find(_.split("=", 2) match { case Array(k, _) => conf.resolver(k, c); case _ => false })
+            Left(partition.fold(s"table '$table' has no column '$c' (${file.getPath.getName})")(
+              dir => s"table '$table' holds column '$c' only as partition directory '$dir', " +
+                "which the shared scan does not read"))
+          case None =>
+            val cols = new MessageType(footer.getName, found.flatMap(_._2).asJava)
+            try Right(toSpark.convert(cols).fields.map(_.dataType).toSeq)
+            catch { case e: AnalysisException => // a type Spark cannot read
+              Left(s"table '$table': ${e.getSimpleMessage.linesIterator.next()}")
+            }
+        }
+      }
+      val files = ParquetFooters.dataFiles(fs, path)
+      if (files.isEmpty) Left(s"table '$table' not found or holds no data file")
+      else {
+        val typed = files.map(f => stored(f).map(f -> _))
+        typed.collectFirst { case Left(reason) => reason }
+          .toLeft(typed.collect { case Right(ft) => ft })
+          .flatMap { all =>
+            val (f0, t0) = all.head
+            // the shared scan reads a source's files under one schema
+            all.tail.iterator.flatMap { case (f, t) =>
+              tables(table).zip(t0.zip(t)).collectFirst { case (c, (a, b)) if a != b =>
+                s"table '$table' column '$c' is ${a.simpleString} in ${f0.getPath.getName} " +
+                  s"but ${b.simpleString} in ${f.getPath.getName}"
               }
+            }.nextOption().toLeft(qualified -> t0)
           }
       }
     }
@@ -261,25 +276,4 @@ object FanOut {
     * listed directory's children and as `file:///p` for a qualified path;
     * both sides of a source match are normalised to `file:/p`. */
   private val LocalUri = "^file:///"
-
-  /** The first data file under `path` in a depth-first walk in name
-    * order (for a flat table directory, the file Spark's own inference
-    * reads), skipping hidden and `_`-prefixed names at every level, as
-    * Spark's listing does; None when the path is missing or holds no
-    * data file. */
-  private def firstDataFile(fs: FileSystem, path: Path): Option[FileStatus] = {
-    def visible(s: FileStatus) = !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith(".")
-    def first(s: FileStatus): Option[FileStatus] =
-      if (!s.isDirectory) Some(s)
-      else fs.listStatus(s.getPath).filter(visible).sortBy(_.getPath.toString).iterator
-        .flatMap(first).nextOption()
-    Try(fs.getFileStatus(path)).toOption.flatMap(first)
-  }
-
-  private def readSchema(conf: Configuration, file: FileStatus): MessageType = {
-    val options = HadoopReadOptions.builder(conf)
-      .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build()
-    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf), options)
-    try reader.getFooter.getFileMetaData.getSchema finally reader.close()
-  }
 }

@@ -82,12 +82,13 @@ object Jdbc {
 
   /** Drop-and-replace sink over JDBC (S7): `mode("overwrite")` drops
     * and recreates the table, like the reference's `if_exists=
-    * 'replace'`. Returns the read-back count (S9).
+    * 'replace'`. Returns the read-back count (S9), a `COUNT(*)` over a
+    * plain connection (no Spark job).
     */
   def writeReplace(df: DataFrame, url: String, table: String,
       props: Properties = derbyProps()): Long = {
     df.write.mode(SaveMode.Overwrite).jdbc(url, table, props)
-    readTable(df.sparkSession, url, table, props).count()
+    countRows(url, table, props)
   }
 
   /** Accumulating sink over JDBC (S8): append to an existing table
@@ -96,7 +97,6 @@ object Jdbc {
     */
   def writeAppend(df: DataFrame, url: String, table: String,
       props: Properties = derbyProps()): Long = {
-    val spark = df.sparkSession
     // Only "table does not exist" means first run / zero rows; any
     // other failure (auth, boot lock, network, syntax, privileges)
     // must propagate — it would otherwise silently corrupt the
@@ -104,12 +104,36 @@ object Jdbc {
     // as first-run would report before=0 while the append and the
     // after-read succeed).
     val before =
-      try readTable(spark, url, table, props).count()
+      try countRows(url, table, props)
       catch {
         case e: Exception if missingObjectSqlState(e) => 0L
       }
     df.write.mode(SaveMode.Append).jdbc(url, table, props)
-    readTable(spark, url, table, props).count() - before
+    countRows(url, table, props) - before
+  }
+
+  /** `SELECT COUNT(*)` of `table` (named as the writer names it). */
+  private def countRows(url: String, table: String, props: Properties): Long =
+    query(url, s"SELECT COUNT(*) FROM $table", props)(_.getLong(1)).head
+
+  /** `sql`'s rows mapped by `row`, over a plain connection on the
+    * driver: for config-sized results (a catalog list, a count), where
+    * a Spark read would cost a job. */
+  private def query[A](url: String, sql: String, props: Properties)(
+      row: java.sql.ResultSet => A): Seq[A] =
+    withConnection(url, props) { conn =>
+      val st = conn.createStatement()
+      try {
+        val rs = st.executeQuery(sql)
+        Iterator.continually(rs).takeWhile(_.next()).map(row).toVector
+      } finally st.close()
+    }
+
+  private def withConnection[A](url: String, props: Properties)(f: java.sql.Connection => A): A = {
+    // registers the driver, as Spark's JDBC reader does before connecting
+    Option(props.getProperty("driver")).foreach(Class.forName)
+    val conn = java.sql.DriverManager.getConnection(url, props)
+    try f(conn) finally conn.close()
   }
 
   /** Schema-catalog SQL per JDBC URL scheme — the dialect of the
@@ -139,28 +163,26 @@ object Jdbc {
     * from the URL's dialect via [[catalogSqlFor]]; pass `catalogSql`
     * to override for engines with a nonstandard catalog. Driver-side
     * list — schema catalogs are config-sized, like the reference's
-    * fetchall().
+    * fetchall() — read over a plain connection, so it starts no Spark
+    * job (`spark` is not used).
     */
   def listSchemas(spark: SparkSession, url: String, prefix: String,
       props: Properties = derbyProps(),
       catalogSql: Option[String] = None): Seq[String] =
-    readQuery(spark, url, catalogSql.getOrElse(catalogSqlFor(url)), props)
-      .collect().map(_.getString(0))
-      .filter(_.startsWith(prefix)).sorted.toSeq
+    query(url, catalogSql.getOrElse(catalogSqlFor(url)), props)(_.getString(1))
+      .filter(_.startsWith(prefix)).sorted
 
   /** CREATE SCHEMA if absent (plain JDBC DDL — provisioning is a
     * driver-side, config-sized act). Derby X0Y68 = already exists.
     */
   def ensureSchema(url: String, schema: String,
-      props: Properties = derbyProps()): Unit = {
-    val conn = java.sql.DriverManager.getConnection(url, props)
-    try {
+      props: Properties = derbyProps()): Unit =
+    withConnection(url, props) { conn =>
       val st = conn.createStatement()
       try st.executeUpdate(s"CREATE SCHEMA $schema")
       catch { case e: java.sql.SQLException if e.getSQLState == "X0Y68" => () }
       finally st.close()
-    } finally conn.close()
-  }
+    }
 
   /** Per-schema fan-out over one connection: the reference's
     * `SHOW DATABASES` → `openmrs_%` → per-schema query flow

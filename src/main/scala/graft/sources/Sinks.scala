@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 
 /** Report sinks (SURVEY.md S7-S9).
   *
@@ -12,8 +12,9 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *
   * Parquet-native equivalents; `verifyCount=true` reproduces the
   * read-back assertion and returns the persisted row count. The
-  * read-back states the written frame's schema, so it infers none
-  * (a count needs no column; schema inference is a Spark job).
+  * read-back sums the row counts in the written files' parquet footers
+  * on the driver, so it starts no Spark job; a file that is not whole
+  * parquet fails it.
   */
 object Sinks {
 
@@ -25,26 +26,19 @@ object Sinks {
     * intent, daily runs accumulating keyed by `date_created`.
     * Returns rows written by THIS run (post-write total minus
     * pre-write total — the read-back verification, S9, minus what
-    * was already there; single-writer assumption).
+    * was already there; single-writer assumption). A missing sink
+    * path holds 0 rows; an unreadable existing file propagates, as
+    * it would otherwise silently inflate the rows-written delta.
     */
-  def writeAppend(df: DataFrame, path: String, verifyCount: Boolean = true): Long = {
-    val spark = df.sparkSession
-    // Only a missing sink path means "first run, zero rows"; any other
-    // read failure (e.g. corrupt existing files) must propagate — it
-    // would otherwise silently inflate the rows-written delta.
-    val before =
-      if (!verifyCount) 0L
-      else try spark.read.schema(df.schema).parquet(path).count() catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getCondition == "PATH_NOT_FOUND" => 0L
-      }
-    df.write.mode(SaveMode.Append).parquet(path)
-    if (verifyCount) spark.read.schema(df.schema).parquet(path).count() - before else -1L
-  }
+  def writeAppend(df: DataFrame, path: String, verifyCount: Boolean = true): Long =
+    write(df, path, SaveMode.Append, verifyCount)
 
   private def write(df: DataFrame, path: String, mode: SaveMode, verify: Boolean): Long = {
+    val conf = df.sparkSession.sessionState.newHadoopConf()
+    val before =
+      if (verify && mode == SaveMode.Append) ParquetFooters.rowCount(conf, path) else 0L
     df.write.mode(mode).parquet(path)
-    if (verify) df.sparkSession.read.schema(df.schema).parquet(path).count() // S9 read-back
+    if (verify) ParquetFooters.rowCount(conf, path) - before // S9 read-back
     else -1L
   }
 

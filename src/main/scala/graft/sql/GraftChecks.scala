@@ -173,9 +173,8 @@ object GraftChecks {
         }
         val names = specs.map(_.tableName)
         val key = need(a, "group_by", "freshness")
-        val long = Freshness.groupedLoadingStatus(expr(key), specs)
         Freshness.freshnessReport(
-          Freshness.pivotMaxDates(long, Seq("facility_id"), names),
+          Freshness.wideMaxDates(Seq(expr(key).cast("int").as("facility_id")), specs),
           Seq("facility_id"), names,
           lit(need(a, "date_created", "freshness")).cast("date"))
       })),

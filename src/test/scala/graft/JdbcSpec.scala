@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.graftbridge.TestBus
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -30,6 +31,17 @@ class JdbcSpec extends AnyFunSuite {
     Jdbc.writeReplace(df, url, "t_append")
     assert(Jdbc.writeAppend(df, url, "t_append") == 2)
     assert(Jdbc.readTable(spark, url, "t_append").count() == 4)
+  }
+
+  test("JDBC sinks read back and list schemas over a plain connection: one Spark job per write") {
+    val sc = spark.sparkContext
+    val df = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
+    Jdbc.writeReplace(df, url, "t_jobs") // warm-up
+    assert(TestBus.countJobs(sc)(Jdbc.writeReplace(df, url, "t_jobs")) == (2L, 1))
+    assert(TestBus.countJobs(sc)(Jdbc.writeAppend(df, url, "t_jobs")) == (2L, 1))
+    Jdbc.ensureSchema(url, "GRAFTJ_A")
+    assert(TestBus.countJobs(sc)(Jdbc.listSchemas(spark, url, prefix = "GRAFTJ_")) ==
+      (Seq("GRAFTJ_A"), 0))
   }
 
   test("readQuery pushes SQL text to the database (S2): aggregate computed DB-side") {

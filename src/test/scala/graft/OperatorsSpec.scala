@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.graftbridge.TestBus
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -66,13 +67,13 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("census: liveRow filter applied; None reproduces no-voided quirk") {
     val df = Seq((1, 0), (1, 0), (1, 1), (2, 0)).toDF("site", "voided")
-    val filtered = Reconciliation.census(
-      CensusSpec("t", df, $"site", Some($"voided" === 0)))
-      .collect().map(r => r.getInt(0) -> r.getLong(2)).toMap
-    assert(filtered == Map(1 -> 2L, 2 -> 1L))
-    val unfiltered = Reconciliation.census(CensusSpec("t", df, $"site", None))
-      .collect().map(r => r.getInt(0) -> r.getLong(2)).toMap
-    assert(unfiltered == Map(1 -> 3L, 2 -> 1L))
+    val both = Reconciliation.censusUnion(Seq(
+        CensusSpec("filtered", df, $"site", Some($"voided" === 0)),
+        CensusSpec("unfiltered", df, $"site", None)))
+      .collect().groupBy(_.getString(1))
+      .view.mapValues(_.map(r => r.getInt(0) -> r.getLong(2)).toMap).toMap
+    assert(both("filtered") == Map(1 -> 2L, 2 -> 1L))
+    assert(both("unfiltered") == Map(1 -> 3L, 2 -> 1L))
   }
 
   test("fan-out: missing source skipped atomically, others union (S4/S5, §2.8.8)") {
@@ -196,5 +197,43 @@ class OperatorsSpec extends AnyFunSuite {
     assert(Sinks.writeReplace(df, dir) == 2)  // drop-and-replace, not append
     assert(Sinks.writeAppend(df, dir) == 2)   // rows written THIS run (S8)
     assert(spark.read.parquet(dir).count() == 4) // table accumulated
+  }
+
+  test("sinks: the read-back sums the written files' parquet footers, with no Spark job") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val out = Files.createTempDirectory("sink-footers").toString + "/out"
+    val sc = spark.sparkContext
+    val conf = spark.sessionState.newHadoopConf()
+    def dataFiles = new java.io.File(out).listFiles().filter(_.getName.startsWith("part-"))
+    val small = Seq((-1L, 1L), (-2L, 2L)).toDF("id", "k")
+    // a first append to a missing path counts from 0
+    assert(TestBus.countJobs(sc)(Sinks.writeAppend(small, out)) == (2L, 1))
+    // one file of many row groups (1 KB blocks)
+    val big = spark.range(0, 20000, 1, 1).select($"id", ($"id" % 7).as("k"))
+    spark.conf.set("parquet.block.size", "1024")
+    val replaced =
+      try TestBus.countJobs(sc)(Sinks.writeReplace(big, out))
+      finally spark.conf.unset("parquet.block.size")
+    assert(replaced == (20000L, 1))
+    val rowGroups = dataFiles.map { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f.getPath), conf))
+      try reader.getRowGroups.size finally reader.close()
+    }
+    assert(rowGroups.sum > 1, rowGroups.toSeq)
+    assert(replaced._1 == spark.read.parquet(out).count())
+    assert(TestBus.countJobs(sc)(Sinks.writeAppend(small, out)) == (2L, 1))
+    assert(spark.read.parquet(out).count() == 20002L)
+    // the footers of data files only: `_SUCCESS` and `.crc` checksums are there too
+    val names = new java.io.File(out).list().toSeq
+    assert(names.contains("_SUCCESS") && names.exists(_.endsWith(".crc")), names)
+
+    // a truncated part file fails the read-back instead of giving a count
+    val victim = dataFiles.head
+    new java.io.File(victim.getParent, s".${victim.getName}.crc").delete()
+    val raf = new java.io.RandomAccessFile(victim, "rw")
+    try raf.setLength(raf.length / 2) finally raf.close()
+    intercept[Exception](Sinks.writeAppend(small, out))
   }
 }

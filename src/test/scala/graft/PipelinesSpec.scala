@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.graftbridge.TestBus
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -264,12 +265,11 @@ class PipelinesSpec extends AnyFunSuite {
       .exists(c => String.valueOf(c.getMessage).contains("unattributed file")), e)
   }
 
-  /** Spark jobs one DCC + PPE run starts over a fleet of `n` sources
-    * (the last one misses `orders`, so both flows plan and skip alike
-    * at every size). */
-  private def fleetJobs(n: Int): Int = {
+  /** Spark jobs one DCC run and one PPE run start over a fleet of `n`
+    * sources holding `tables` (the last source misses the last table, so
+    * both flows plan and skip alike at every size). */
+  private def fleetJobs(n: Int, tables: Seq[String] = Seq("obs", "encounter", "orders")): (Int, Int) = {
     val root = Files.createTempDirectory(s"fleet-$n").toString
-    val tables = Seq("obs", "encounter", "orders")
     (1 to n).foreach { i =>
       (if (i == n) tables.init else tables).foreach { t =>
         facts(10 + i).write.parquet(s"$root/openmrs_s$i/$t")
@@ -277,28 +277,47 @@ class PipelinesSpec extends AnyFunSuite {
     }
     val out = Files.createTempDirectory(s"fleet-$n-out").toString
     val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    org.apache.spark.graftbridge.TestBus.drain(sc)
-    sc.addSparkListener(listener)
-    try {
-      val dcc = dccRun(root, tables, s"$out/dcc")
-      val ppe = ppeRun(root, tables.map(_ -> Some("voided")), s"$out/ppe")
-      assert(dcc.skipped.map(_.source) == Seq(s"openmrs_s$n") && dcc.rowsWritten == n - 1)
-      assert(ppe.skipped == dcc.skipped)
-      org.apache.spark.graftbridge.TestBus.drain(sc)
-    } finally sc.removeSparkListener(listener)
-    jobs.get
+    val (dcc, dccJobs) = TestBus.countJobs(sc)(dccRun(root, tables, s"$out/dcc"))
+    val (ppe, ppeJobs) = TestBus.countJobs(sc)(ppeRun(root, tables.map(_ -> Some("voided")), s"$out/ppe"))
+    assert(dcc.skipped.map(_.source) == Seq(s"openmrs_s$n") && dcc.rowsWritten == n - 1)
+    assert(ppe.skipped == dcc.skipped)
+    (dccJobs, ppeJobs)
   }
 
   test("fleet scaling: one DCC + PPE run starts as many Spark jobs at 9 sources as at 3") {
     fleetJobs(3) // warm-up: first-use jobs of the session are not the fleet's
     val (small, large) = (fleetJobs(3), fleetJobs(9))
-    assert(small == large, s"$small Spark jobs at 3 sources, $large at 9")
+    assert(small == large, s"(DCC, PPE) Spark jobs: $small at 3 sources, $large at 9")
+  }
+
+  test("fleet jobs: DCC starts at most 2 Spark jobs and PPE at most 3, as many at 6 tables as at 3") {
+    fleetJobs(3) // warm-up
+    val three = fleetJobs(3)
+    val six = fleetJobs(3, Seq("obs", "encounter", "orders", "person", "patient", "visit"))
+    assert(three._1 <= 2 && three._2 <= 3, s"(DCC, PPE) Spark jobs: $three")
+    assert(three == six, s"(DCC, PPE) Spark jobs: $three at 3 tables, $six at 6")
+  }
+
+  test("fleet isolation: a source whose table files disagree on a checked column's type is skipped") {
+    val root = Files.createTempDirectory("fleet-files").toString
+    Seq("openmrs_a", "openmrs_b", "openmrs_c").foreach(src => facts(4).write.parquet(s"$root/$src/obs"))
+    // openmrs_b's obs gains a file storing `voided` as a string, listed after its int files
+    val odd = Files.createTempDirectory("fleet-files-odd").toString + "/t"
+    facts(2).select($"id", $"event_ts", $"voided".cast("string").as("voided"))
+      .coalesce(1).write.parquet(odd)
+    val oddFile = new java.io.File(odd).listFiles().filter(_.getName.endsWith(".parquet")).head
+    Files.move(oddFile.toPath, java.nio.file.Paths.get(s"$root/openmrs_b/obs/part-99999.parquet"))
+    val out = Files.createTempDirectory("fleet-files-out").toString
+    val ppe = ppeRun(root, Seq("obs" -> Some("voided")), out)
+    assert(ppe.skipped.map(_.source) == Seq("openmrs_b"))
+    val reason = ppe.skipped.head.reason
+    assert(reason.contains("column 'voided' is int in ") &&
+      reason.endsWith("but string in part-99999.parquet"), reason)
+    assert(byKey(out, "site_id", "record_count_source") ==
+      Seq("openmrs_a", "openmrs_c").map(siteKey(_) -> Seq(3L)).toMap)
+    // DCC checks only `event_ts`, which both files store alike
+    val dcc = dccRun(root, Seq("obs"), s"$out/dcc")
+    assert(dcc.skipped.isEmpty && dcc.rowsWritten == 3)
   }
 
   test("SQL-callable checks: CALL graft.<check> runs the operator layer from pure SQL text") {

@@ -35,6 +35,25 @@ class PlanShapeSpec extends AnyFunSuite {
       "raw-long ts predicate must reach the events scan (row-group pruning)")
   }
 
+  test("q05/q02: the census and the loading status fold every table into one aggregate shuffle") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    // shuffles fed by a (partial) aggregate, in the initial adaptive plan
+    def aggregateShuffles(df: org.apache.spark.sql.DataFrame): Int = {
+      val root = df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+      root.collect { case e: ShuffleExchangeExec if e.child.isInstanceOf[BaseAggregateExec] => e }.size
+    }
+    for ((name, df) <- Seq(
+        "q05" -> ParityQueries.q05SourceCounts(spark, d),
+        "q02" -> ParityQueries.q02FanoutCounts(spark, d)))
+      assert(aggregateShuffles(df) == 1,
+        s"$name: one shuffle for the union of the tables' projections:\n${plan(df)}")
+  }
+
   test("q15: brute top-k plans as TakeOrderedAndProject (no global sort)") {
     val p = plan(ExtensionQueries.q15KnnBrute(spark, d))
     assert(p.contains("TakeOrderedAndProject"))
