@@ -61,11 +61,14 @@ object Pipelines {
     val written =
       if (plan.sources.isEmpty) 0L
       else {
-        val wide = Freshness.wideMaxDates(Seq(col(FanOut.SourceColumn).as("facility_name")),
+        val rows = Freshness.datedRows(Seq(col(FanOut.SourceColumn).as("facility_name")),
           factTables.map { case (t, tsCol) =>
             FreshnessSpec(t, plan.scan(spark, t), col(tsCol), cutoff)
-          },
-          keep = Some(spark.createDataset(plan.sources)(Encoders.STRING).toDF("facility_name")))
+          })
+        // every planned source, dateless: its row survives a cutoff that drops all its rows
+        val planned = spark.createDataset(plan.sources)(Encoders.STRING).toDF("facility_name")
+        val wide = Freshness.pivotMaxDates(rows.unionByName(planned, allowMissingColumns = true),
+          Seq("facility_name"), factTables.map(_._1))
         val report = Freshness.freshnessReport(
           wide.withColumn("facility_id", sourceKey(col("facility_name"))),
           Seq("facility_id", "facility_name"), factTables.map(_._1), current_date())

@@ -14,13 +14,13 @@ import graft.functions.DqFunctions._
   * with a row-wise sample stddev of the max-dates' day ordinals
   * (data_consistency_checks.py:43-77, 125-141).
   *
-  * Scale notes: the grouped forms ([[groupedLoadingStatus]],
-  * [[wideMaxDates]]) project each table's rows to (facility, table,
-  * date), union the projections and aggregate ONCE, partial-aggregated
-  * at the scans: one shuffle and one Spark job for any number of
-  * tables, and #facilities × #tables rows cross it. [[wideMaxDates]]
-  * goes straight to the wide frame, so the long frame's pivot (a
-  * second aggregation) is left to [[pivotMaxDates]]'s callers.
+  * Scale notes: [[groupedLoadingStatus]] projects each table's rows to
+  * (facility, table, date) ([[datedRows]]), unions the projections and
+  * aggregates ONCE, partial-aggregated at the scans: one shuffle and
+  * one Spark job for any number of tables, and #facilities × #tables
+  * rows cross it. [[pivotMaxDates]] is one aggregation too, so it goes
+  * from the long frame or straight from [[datedRows]] to the wide
+  * frame (max of max is max).
   */
 object Freshness {
 
@@ -68,7 +68,7 @@ object Freshness {
     * (named columns over each spec's frame), `table_name` (P5) and the
     * event date `max_date` (E2) and unioned: the input of one
     * aggregation over all tables. */
-  private def datedRows(keys: Seq[Column], specs: Seq[FreshnessSpec]): DataFrame =
+  def datedRows(keys: Seq[Column], specs: Seq[FreshnessSpec]): DataFrame =
     specs.map { spec =>
       spec.df
         .filter(spec.eventTs < spec.cutoff)
@@ -90,39 +90,21 @@ object Freshness {
         count(lit(1)).as("record_count"),
         max("max_date").as("max_date"))
 
-  /** The wide frame [[pivotMaxDates]] makes of the grouped loading
-    * status, straight from the tables' rows: one row per `keys` value,
-    * one `<table>_max_date` column per spec, each a
-    * `max(when(table_name = t, date))` of one aggregation. `keep` (rows
-    * of the key columns) is unioned in dateless, so each of its keys
-    * gets a row with null dates even when none of its rows falls
-    * before a cutoff.
-    */
-  def wideMaxDates(
-      keys: Seq[Column],
-      specs: Seq[FreshnessSpec],
-      keep: Option[DataFrame] = None): DataFrame = {
-    val rows = datedRows(keys, specs)
-    val maxDates = specs.map(s =>
-      max(when(col("table_name") === s.tableName, col("max_date"))).as(s"${s.tableName}_max_date"))
-    keep.fold(rows)(rows.unionByName(_, allowMissingColumns = true))
-      .groupBy(rows.columns.toSeq.dropRight(2).map(col): _*)
-      .agg(maxDates.head, maxDates.tail: _*)
-  }
-
-  /** Pivot the long frame wide: one row per facility, one
-    * `<table>_max_date` column per table (A4 + P8). Explicit pivot
-    * values → single pass, deterministic columns (SURVEY.md §7.5).
+  /** Pivot long → wide: one row per `keyCols` value, one
+    * `<table>_max_date` column per table (A4 + P8), each a
+    * `max(when(table_name = t, max_date))` of ONE aggregation (Spark's
+    * `pivot` would group twice). Explicit tables → deterministic
+    * columns (SURVEY.md §7.5); a table with no row gives a null column,
+    * and a row whose `table_name` is null or unlisted (a key unioned in
+    * dateless, say) only makes its key's row.
     */
   def pivotMaxDates(
       long: DataFrame,
       keyCols: Seq[String],
       tables: Seq[String]): DataFrame = {
-    val wide = long
-      .groupBy(keyCols.map(col): _*)
-      .pivot("table_name", tables)
-      .agg(max("max_date"))
-    tables.foldLeft(wide)((d, t) => d.withColumnRenamed(t, s"${t}_max_date"))
+    val maxDates = tables.map(t =>
+      max(when(col("table_name") === t, col("max_date"))).as(s"${t}_max_date"))
+    long.groupBy(keyCols.map(col): _*).agg(maxDates.head, maxDates.tail: _*)
   }
 
   /** Final DCC report: date ordinals (E7) → row-wise sample stddev

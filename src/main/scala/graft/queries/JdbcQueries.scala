@@ -65,7 +65,7 @@ object JdbcQueries {
         url, s"GRAFTS_R$r.nation_part")
     }
     Jdbc.ensureSchema(url, "GRAFTS_R4") // enumerable, but no nation_part
-    val schemas = Jdbc.listSchemas(spark, url, prefix = "GRAFTS_R")
+    val schemas = Jdbc.listSchemas(url, prefix = "GRAFTS_R")
     val res = Jdbc.fanOutSchemas(spark, url, schemas,
       s => s"""SELECT COUNT(*) AS "n_rows" FROM $s.nation_part""")
     res.df.get.select(col("source_schema"), col("n_rows").cast("long"))

@@ -189,7 +189,7 @@ object FanOut {
       val qualified = fs.makeQualified(path)
       // one file's stored types of the required columns
       def stored(file: FileStatus): Either[String, Seq[DataType]] = {
-        val footer = ParquetFooters.footer(hadoopConf, file).getFileMetaData.getSchema
+        val footer = ParquetFooters.schema(hadoopConf, file)
         val fields = footer.getFields.asScala.toSeq
         val found = tables(table).map(c => c -> fields.find(f => conf.resolver(f.getName, c)))
         found.collectFirst { case (c, None) => c } match {
@@ -211,19 +211,16 @@ object FanOut {
       val files = ParquetFooters.dataFiles(fs, path)
       if (files.isEmpty) Left(s"table '$table' not found or holds no data file")
       else {
-        val typed = files.map(f => stored(f).map(f -> _))
-        typed.collectFirst { case Left(reason) => reason }
-          .toLeft(typed.collect { case Right(ft) => ft })
-          .flatMap { all =>
-            val (f0, t0) = all.head
-            // the shared scan reads a source's files under one schema
-            all.tail.iterator.flatMap { case (f, t) =>
-              tables(table).zip(t0.zip(t)).collectFirst { case (c, (a, b)) if a != b =>
-                s"table '$table' column '$c' is ${a.simpleString} in ${f0.getPath.getName} " +
-                  s"but ${b.simpleString} in ${f.getPath.getName}"
-              }
-            }.nextOption().toLeft(qualified -> t0)
-          }
+        // the shared scan reads a source's files under the first file's
+        // types; stop at the first file that fails or disagrees
+        stored(files.head).flatMap { t0 =>
+          files.tail.iterator.map(f => stored(f).flatMap { t =>
+            tables(table).zip(t0.zip(t)).collectFirst { case (c, (a, b)) if a != b =>
+              s"table '$table' column '$c' is ${a.simpleString} in ${files.head.getPath.getName} " +
+                s"but ${b.simpleString} in ${f.getPath.getName}"
+            }.toLeft(())
+          }).collectFirst { case Left(reason) => reason }.toLeft(qualified -> t0)
+        }
       }
     }
 

@@ -174,7 +174,9 @@ object GraftChecks {
         val names = specs.map(_.tableName)
         val key = need(a, "group_by", "freshness")
         Freshness.freshnessReport(
-          Freshness.wideMaxDates(Seq(expr(key).cast("int").as("facility_id")), specs),
+          Freshness.pivotMaxDates(
+            Freshness.datedRows(Seq(expr(key).cast("int").as("facility_id")), specs),
+            Seq("facility_id"), names),
           Seq("facility_id"), names,
           lit(need(a, "date_created", "freshness")).cast("date"))
       })),

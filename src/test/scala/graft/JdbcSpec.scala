@@ -40,7 +40,7 @@ class JdbcSpec extends AnyFunSuite {
     assert(TestBus.countJobs(sc)(Jdbc.writeReplace(df, url, "t_jobs")) == (2L, 1))
     assert(TestBus.countJobs(sc)(Jdbc.writeAppend(df, url, "t_jobs")) == (2L, 1))
     Jdbc.ensureSchema(url, "GRAFTJ_A")
-    assert(TestBus.countJobs(sc)(Jdbc.listSchemas(spark, url, prefix = "GRAFTJ_")) ==
+    assert(TestBus.countJobs(sc)(Jdbc.listSchemas(url, prefix = "GRAFTJ_")) ==
       (Seq("GRAFTJ_A"), 0))
   }
 
@@ -105,7 +105,7 @@ class JdbcSpec extends AnyFunSuite {
     Jdbc.writeReplace(df.limit(1), url, "GRAFTE_B.t_enum")
     Jdbc.ensureSchema(url, "GRAFTE_C")       // no t_enum → skipped
     Jdbc.writeReplace(df, url, "OTHERPFX.t_enum") // prefix-excluded
-    val schemas = Jdbc.listSchemas(spark, url, prefix = "GRAFTE_")
+    val schemas = Jdbc.listSchemas(url, prefix = "GRAFTE_")
     assert(schemas == Seq("GRAFTE_A", "GRAFTE_B", "GRAFTE_C"))
     val res = Jdbc.fanOutSchemas(spark, url, schemas,
       s => s"""SELECT COUNT(*) AS "n" FROM $s.t_enum""")
@@ -135,12 +135,12 @@ class JdbcSpec extends AnyFunSuite {
     // returns the identical list shape q41 consumes
     Jdbc.ensureSchema(url, "GRAFTD_A")
     Jdbc.ensureSchema(url, "GRAFTD_B")
-    val live = Jdbc.listSchemas(spark, url, prefix = "GRAFTD_")
+    val live = Jdbc.listSchemas(url, prefix = "GRAFTD_")
     assert(live == Seq("GRAFTD_A", "GRAFTD_B"))
     Jdbc.writeReplace(
       Seq("GRAFTD_A", "GRAFTD_B", "OTHER").toDF("schema_name"),
       url, "t_schemata_mock")
-    val mocked = Jdbc.listSchemas(spark, url, prefix = "GRAFTD_",
+    val mocked = Jdbc.listSchemas(url, prefix = "GRAFTD_",
       catalogSql = Some("""SELECT "schema_name" FROM t_schemata_mock"""))
     assert(mocked == live)
   }
@@ -167,7 +167,7 @@ class JdbcSpec extends AnyFunSuite {
             s"INSERT INTO INFORMATION_SCHEMA.SCHEMATA VALUES ('$s')")
       } finally st.close()
     } finally conn.close()
-    val got = Jdbc.listSchemas(spark, url, prefix = "GRAFTV_",
+    val got = Jdbc.listSchemas(url, prefix = "GRAFTV_",
       catalogSql = Some(sql))
     assert(got == Seq("GRAFTV_A", "GRAFTV_B"),
       "the standard-arm SQL string must run unmodified and feed the same prefix filter")
@@ -183,7 +183,7 @@ class JdbcSpec extends AnyFunSuite {
     Jdbc.writeReplace(df, url, "GRAFTR_A.t_race")
     Jdbc.writeReplace(df.limit(1), url, "GRAFTR_B.t_race")
     Jdbc.writeReplace(df, url, "GRAFTR_C.t_race")
-    val schemas = Jdbc.listSchemas(spark, url, prefix = "GRAFTR_")
+    val schemas = Jdbc.listSchemas(url, prefix = "GRAFTR_")
     assert(schemas == Seq("GRAFTR_A", "GRAFTR_B", "GRAFTR_C"))
     // the drop happens between enumeration and fan-out — the race
     val conn = java.sql.DriverManager.getConnection(url, Jdbc.derbyProps())
