@@ -95,15 +95,10 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_UNTUNED: measurement escape hatch — run WITHOUT the
-    // engine session tuning, for before/after comparisons (r20).
-    val builder = SparkSession.builder()
+    val spark = GraftSession.configure(SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    val spark =
-      (if (sys.env.contains("SPARK_GRAFT_UNTUNED")) builder
-       else GraftSession.configure(builder)).getOrCreate()
+      .config("spark.ui.enabled", "false")).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     LogSilence.boundedWindowWarnings() // every remaining unpartitioned window is config-bounded (see LogSilence)
     // warm up JVM/codegen/parquet-footer paths so the first timed

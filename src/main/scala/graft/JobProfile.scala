@@ -77,13 +77,10 @@ object JobProfile {
     require(args.length >= 2, "usage: JobProfile <sfDir> <query> [query...]")
     val sfDir = args(0)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
+    val spark = GraftSession.configure(SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    val spark =
-      (if (sys.env.contains("SPARK_GRAFT_UNTUNED")) builder
-       else GraftSession.configure(builder)).getOrCreate()
+      .config("spark.ui.enabled", "false")).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     LogSilence.boundedWindowWarnings()
     val rec = new Rec

@@ -107,7 +107,12 @@ object Dedup {
           .distinctNgramHashes(col(textCol), n)).as("g"))
       .persistFresh()
     val dfq = exAll.groupBy("g").agg(count(lit(1)).as("_df"))
-    val exf = maxDfFraction match {
+    // The filtered posting list feeds prefix ranking AND the
+    // verification sets; persist it (id, g, df — 8-byte columns)
+    // rather than re-running the shingle explode + DF join per
+    // consumer. A warehouse-scale run materializes it as a table
+    // (same role as the minhash signature table).
+    val exf = (maxDfFraction match {
       case None => exAll.join(dfq, "g")
       case Some(frac) =>
         // 1-row corpus count broadcast onto the DF table; shingles
@@ -116,13 +121,7 @@ object Dedup {
         val total = df.agg(count(lit(1)).cast("double").as("_n"))
         exAll.join(dfq, "g").crossJoin(total)
           .filter(col("_df") <= col("_n") * frac).drop("_n")
-    }
-    // The filtered posting list feeds prefix ranking AND the
-    // verification sets; persist it (id, g, df — 8-byte columns)
-    // rather than re-running the shingle explode + DF join per
-    // consumer. A warehouse-scale run materializes it as a table
-    // (same role as the minhash signature table).
-    exf.persistFresh()
+    }).persistFresh()
     // Prefix filtering (SSJoin/PPJoin family): under a global shingle
     // order, a pair with J(A,B) ≥ t must share an element within the
     // first floor((1−t)·|A|)+1 elements of EACH side — otherwise the

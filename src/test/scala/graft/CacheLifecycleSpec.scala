@@ -3,19 +3,31 @@ package graft
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.AdaptiveCache.CensusPersist
+import graft.CacheLifecycle.FreshPersist
 import graft.operators.Dedup
 
 /** The plain dedup entry points must not leak their persisted
   * intermediates into a long-lived session: after the returned plan
   * executes once, the caches are released (asynchronously, via a
   * one-shot QueryExecutionListener). The *WithCaches variants leave
-  * lifetime to the caller.
+  * lifetime to the caller. Each invocation owns its cache entries, so
+  * one invocation's release never drops another's, on one thread or
+  * two.
   */
 class CacheLifecycleSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   private def cachedRddIds(): Set[Int] =
     spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+
+  private def persistentRddIds(): Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  private def inMemoryRelations(df: org.apache.spark.sql.DataFrame): Int =
+    df.queryExecution.withCachedData.collect {
+      case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r
+    }.size
 
   private def eventually(timeoutMs: Long = 15000)(cond: => Boolean): Boolean = {
     val deadline = System.currentTimeMillis + timeoutMs
@@ -104,29 +116,103 @@ class CacheLifecycleSpec extends AnyFunSuite {
     sigs.unpersist(blocking = true)
   }
 
-  test("a fresh registration steals a stale claim on the same canonical plan and re-pins") {
+  test("a fresh invocation caches apart from a pending claim on the same plan") {
     // the r20 q223 failure shape: invocation N's release event lags on
-    // the async listener bus (here: its trigger simply never executes),
-    // invocation N+1 persists the same canonical plan (CacheManager
-    // shares the entry), and without the steal N's late release would
-    // drop N+1's cache mid-flight — N+1 then recomputes the
-    // intermediate once per consumer, uncached
+    // the async listener bus (here: its trigger has not executed yet)
+    // while invocation N+1 persists the same plan. Each invocation owns
+    // its entry, so N's late release cannot drop N+1's cache.
     def mk() = spark.range(500).selectExpr("id % 7 as k")
       .groupBy("k").count()
-    val a = mk(); a.persist()
+    val a = mk().persistFresh()
     val triggerA = a.selectExpr("sum(count) as s")
     CacheLifecycle.releaseWhenExecuted(triggerA, Seq(a))
-    // triggerA never executes: A's claim stays pending, its entry cached
-    val b = mk(); b.persist() // shares A's entry ("already cached" WARN)
+    val b = mk().persistFresh()
     val triggerB = b.selectExpr("sum(count) as s")
     CacheLifecycle.releaseWhenExecuted(triggerB, Seq(b))
-    // registration B must have stolen A's claim (released it
-    // synchronously) and re-pinned the plan, so B executes cached
-    assert(b.storageLevel != StorageLevel.NONE,
-      "fresh invocation's cache must be pinned after the steal")
-    triggerB.collect()
+    assert(b.storageLevel != StorageLevel.NONE && a.storageLevel != StorageLevel.NONE,
+      "each invocation's cache must be pinned while A's claim is pending")
+    assert(inMemoryRelations(triggerB) == 1, "B must execute from its own cache")
+    triggerA.collect()
+    assert(eventually() { a.storageLevel == StorageLevel.NONE },
+      "A's claim must release after A executes")
+    assert(b.storageLevel != StorageLevel.NONE, "A's release must leave B's entry cached")
+    assert(triggerB.collect().head.getLong(0) == 500L)
     assert(eventually() { b.storageLevel == StorageLevel.NONE },
       "B's own claim must still release after B executes")
+  }
+
+  test("a registration neither releases nor re-pins its caches, and releases them all after the trigger") {
+    // a census found unpersisted at registration (a release that has
+    // already landed) registered together with a materialized fresh
+    // cache: registering must leave both as it found them, and the
+    // trigger's execution must release both
+    def base = spark.range(400).selectExpr("id % 11 as k", "id")
+    val census = base.groupBy("k").count().persistCensus()
+    census.unpersist(blocking = true)
+    val fresh = base.selectExpr("k", "id * 2 as v").persistFresh()
+    val before = persistentRddIds()
+    fresh.count()
+    val freshRdds = persistentRddIds() -- before
+    assert(freshRdds.nonEmpty, "the fresh cache must be materialized")
+    val trigger = fresh.join(census, "k").selectExpr("sum(v + count) as s")
+    CacheLifecycle.releaseWhenExecuted(trigger, Seq(census, fresh))
+    assert(census.storageLevel == StorageLevel.NONE, "registration re-pinned the census")
+    assert(freshRdds.subsetOf(persistentRddIds()), "registration released the fresh cache")
+    trigger.collect()
+    assert(eventually() {
+        census.storageLevel == StorageLevel.NONE && fresh.storageLevel == StorageLevel.NONE
+      }, "registered caches still pinned after the trigger executed")
+  }
+
+  test("two threads running one managed-cache operator get the sequential results and release everything") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions._
+    // a census core (persistCensus) and a run/truth pair (persistFresh)
+    // consumed by two branches of the returned plan, as in q223
+    def op(): DataFrame = {
+      val base = spark.range(3000).select((col("id") % 53).as("q"), col("id").as("n"),
+        (col("id") * 7 % 101).cast("double").as("s"))
+      val core = base.groupBy("q").agg(count(lit(1)).as("c")).persistCensus()
+      val run = base.filter(col("n") % 3 =!= 0).join(core, "q").persistFresh()
+      val truth = base.filter(col("n") % 2 === 0).persistFresh()
+      val hits = run.join(truth, Seq("q", "n")).groupBy("q").agg(count(lit(1)).as("hits"))
+      val mass = run.groupBy("q").agg(sum(col("s")).as("mass"), max(col("c")).as("c"))
+      val out = mass.join(hits, Seq("q"), "left").orderBy("q")
+      CacheLifecycle.releaseWhenExecuted(out, Seq(core, run, truth))
+      out
+    }
+    val sequential = op().collect().toSeq
+    assert(sequential.length == 53)
+    val before = persistentRddIds()
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      (1 to 3).foreach { _ =>
+        val start = new java.util.concurrent.CountDownLatch(1)
+        val runs = (1 to 2).map { _ =>
+          pool.submit(new java.util.concurrent.Callable[Seq[org.apache.spark.sql.Row]] {
+            override def call() = {
+              start.await()
+              op().collect().toSeq
+            }
+          })
+        }
+        start.countDown()
+        runs.foreach(r => assert(r.get(120, java.util.concurrent.TimeUnit.SECONDS) == sequential))
+      }
+    } finally pool.shutdown()
+    assert(eventually() { persistentRddIds().subsetOf(before) },
+      "persistent RDDs did not return to their starting set")
+  }
+
+  test("ngramJaccardPairs reads its posting caches from the pair plan") {
+    // the pair plan must read the persisted frames the operator
+    // returns, not their untagged inputs: 2 × prefix table (candidate
+    // self-join) + 2 × filtered posting list (verification sets)
+    val docs = Tables.documents(spark, TestSpark.sf).limit(30)
+    val (pairs, caches) =
+      Dedup.ngramJaccardPairsWithCaches(docs, "doc_id", "text", n = 3, threshold = 0.8)
+    try assert(inMemoryRelations(pairs) == 4)
+    finally caches.foreach(_.unpersist(blocking = true))
   }
 
   test("unrelated executions do not release caches prematurely") {
