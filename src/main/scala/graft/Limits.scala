@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.broadcast
+
 /** Engine-wide size thresholds shared across operator families, so a
   * tuning change lands everywhere at once instead of drifting across
   * per-file copies (r10 advice: the 4M-row literal was re-declared at
@@ -17,4 +20,12 @@ object Limits {
     * under Spark's driver/executor broadcast ceilings.
     */
   val BroadcastRowLimit: Long = 4L << 20
+
+  /** Broadcast `df` only when its (already computed, census-derived)
+    * row count `rows` is at or under `limit`: the cardinality-adaptive
+    * form of the broadcast hint, so a high-cardinality group column
+    * degrades to a shuffled join instead of a driver OOM.
+    */
+  def broadcastIfSmall(df: DataFrame, rows: Long, limit: Long = BroadcastRowLimit): DataFrame =
+    if (rows <= limit) broadcast(df) else df
 }

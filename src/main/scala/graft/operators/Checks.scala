@@ -1064,8 +1064,6 @@ object Checks {
       .persistCensus()
     val spark = df.sparkSession
     val ng = counts.agg(countDistinct(col("_g"))).head().getLong(0)
-    def bcIfSmall(f: DataFrame, rows: Long): DataFrame =
-      if (rows <= broadcastRowLimit) broadcast(f) else f
     val spine = spark.range(1, 10).select(col("id").cast("int").as("digit"))
       .withColumn("expected_p",
         element_at(array(BenfordP.map(s => lit(s.toDouble)): _*), col("digit")))
@@ -1076,7 +1074,8 @@ object Checks {
         col("expected_p"))
     val tot = census.groupBy(col("_g").as("_gt")).agg(sum(col("n")).as("_N"))
     val contrib = census
-      .join(bcIfSmall(tot, ng), col("_g") === col("_gt")).drop("_gt")
+      .join(Limits.broadcastIfSmall(tot, ng, broadcastRowLimit), col("_g") === col("_gt"))
+      .drop("_gt")
       .withColumn("observed_p",
         when(col("_N") > 0L, col("n").cast("double") / col("_N").cast("double")))
       .withColumn("chi2_contrib",
@@ -1091,7 +1090,8 @@ object Checks {
         .cast("decimal(38,0)"))
         .cast("double") / lit(1e15) / lit(9.0)).as("mad"))
     val out = contrib
-      .join(bcIfSmall(summary, ng), col("_g") === col("_gs")).drop("_gs")
+      .join(Limits.broadcastIfSmall(summary, ng, broadcastRowLimit), col("_g") === col("_gs"))
+      .drop("_gs")
       .select(col("_g").as("group_key"), col("digit"), col("n"),
         col("observed_p"), col("expected_p"), col("chi2_contrib"),
         col("chi2_stat"), col("mad"))

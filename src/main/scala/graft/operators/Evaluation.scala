@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.CacheLifecycle.FreshPersist
 import graft.AdaptiveCache.CensusPersist
+import graft.Limits
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -19,23 +20,6 @@ import org.apache.spark.sql.functions._
   * naive single-node engine.
   */
 object Evaluation {
-
-  /** Rows at or under which the grouped-eval family's offsets/census
-    * tables are broadcast — the engine-wide [[graft.Limits.BroadcastRowLimit]]
-    * (shared with StatTests/Profiling so a tuning change lands
-    * everywhere at once).
-    */
-  private val BroadcastRowLimit: Long = graft.Limits.BroadcastRowLimit
-
-  /** Broadcast only when the (already-computed, census-derived) row
-    * count is at or under [[BroadcastRowLimit]] — the
-    * cardinality-adaptive form of the broadcast hint, so pointing
-    * q124-style operators at a high-cardinality group column degrades
-    * to a shuffled join instead of a driver OOM. The count costs one
-    * cheap agg over the persisted census, never a raw-row scan.
-    */
-  private def broadcastIfSmall(df: DataFrame, rows: Long, limit: Long): DataFrame =
-    if (rows <= limit) broadcast(df) else df
 
   /** The banded-census + band-spine stage every member of the
     * calibration/sweep family shares: ONE raw scan (cheap-column
@@ -107,10 +91,9 @@ object Evaluation {
     * q119 logit is the full text-feature extraction). Bounds and the
     * prefix-sum cells derive from the persisted census itself
     * (distinct-score scale), never from a second raw scan. The
-    * cumulative-negative prefix uses the q102 cell machinery: per-cell
-    * totals offset a window partitioned BY cell, so even a census with
-    * billions of distinct scores ranks `cells`-way parallel — no
-    * unpartitioned window task anywhere. The rank-sum numerator
+    * cumulative-negative prefix is a [[RankedPrefix]], cell-partitioned
+    * past the direct-window gate, so even a census with billions of
+    * distinct scores ranks `cells`-way parallel. The rank-sum numerator
     * multiplies in DECIMAL(38,0) — each factor is cast BEFORE the
     * product, so nothing ever wraps in Long arithmetic (exact far past
     * 100 TB row counts: the factor 2·cumNeg+neg stays a Long ≤ 2N
@@ -181,7 +164,7 @@ object Evaluation {
     * never drift.
     */
   private def aucMassCore(nn: DataFrame, cells: Int): DataFrame =
-    rankedMass(nn, cells) match {
+    rankedMass(nn, grouped = false, cells) match {
       case None =>
         // empty eval set: a defined shape, not a crash
         nn.sparkSession.range(1).select(
@@ -191,65 +174,60 @@ object Evaluation {
       case Some((ranked, censusAll)) => aucFinish(ranked, censusAll)
     }
 
-  /** Build the cell-ranked distinct-score census shared by the
-    * rank-statistic family ([[aucExact]]/[[aucExactWeighted]]'s AUC
-    * and [[rankSumTest]]'s Mann–Whitney z): one raw scan collapsed to
-    * a persisted (score → pos mass, neg mass) census, bounds and the
-    * `cells`-way-parallel cumulative-negative prefix derived from the
-    * census itself. Returns None when the census is empty (no rows, or
-    * every score NULL/NaN) — the cache is already released in that
-    * case; otherwise (ranked, censusAll) with the caller owning the
-    * census release (key it on the RETURNED plan, see [[aucFinish]]).
+  /** The (group?, score) → (pos, neg) mass census shared by the
+    * rank-statistic family, with [[RankedPrefix]] running sums on it:
+    * one raw scan of the prepared frame `nn` (`_g` when `grouped`,
+    * `_v`, and the columns `pos`/`neg` read) collapsed to a persisted
+    * census. Bounds, cells, offsets, and the ranked branch all ride the
+    * cache — the raw input (and any expensive score expression feeding
+    * it) is never read again. The direct gate is the census size from
+    * the bounds job; grouped cells use GLOBAL bounds (cells only
+    * control window parallelism), and the grouped offsets table is
+    * counted off the census on the cell path. Returns None when the
+    * census is empty (no rows, or every score NULL/NaN) — the cache is
+    * already released in that case; otherwise (ranked, censusAll) with
+    * the caller owning the census release (key it on the RETURNED
+    * plan, see [[aucFinish]]).
     */
-  private[graft] def rankedMass(
-      nn: DataFrame, cells: Int,
-      directWindowRows: Long = StatTests.DefaultDirectWindowRows)
+  private def rankedCensus(
+      nn: DataFrame, grouped: Boolean, pos: Column, neg: Column,
+      sums: Seq[(String, Column)], descending: Boolean, exclusive: Boolean,
+      cells: Int, broadcastRowLimit: Long, directWindowRows: Long)
       : Option[(DataFrame, DataFrame)] = {
     require(cells >= 1, s"cells must be >= 1, got $cells")
-    val W = org.apache.spark.sql.expressions.Window
-    // score census FIRST: one raw scan, persisted at distinct-score
-    // scale (3 longs + a double per row). Bounds, cells, offsets, and
-    // the ranked branch all ride the cache — the raw input (and any
-    // expensive score expression feeding it) is never read again.
-    val censusAll = nn.groupBy(col("_v"))
-      .agg(sum(col("_pw")).as("_pos"),
-        sum(col("_nw")).as("_neg"))
+    val keys = if (grouped) Seq("_g") else Nil
+    val censusAll = nn.groupBy((keys :+ "_v").map(col): _*)
+      .agg(sum(pos).as("_pos"), sum(neg).as("_neg"))
       .persistCensus()
     val census = censusAll.filter(col("_v").isNotNull && !isnan(col("_v")))
     val bounds = census.agg(min(col("_v")).as("mn"), max(col("_v")).as("mx"),
-      count(lit(1)).as("nd")).head()
-    if (bounds.isNullAt(0)) {
+      count(lit(1)).as("n")).head()
+    if (bounds.getLong(2) == 0L) {
       censusAll.unpersist(blocking = false)
       return None
     }
-    val ranked = if (bounds.getLong(2) <= directWindowRows) {
-      // direct path (census fits one bounded window task — see
-      // StatTests.DefaultDirectWindowRows): the exclusive prefix in
-      // one window, no cell/offset apparatus, same exact Long sums
-      census.withColumn("_cumNeg",
-        coalesce(sum(col("_neg")).over(
-          W.orderBy(col("_v")).rowsBetween(W.unboundedPreceding, -1)), lit(0L)))
-    } else {
-      val (mn, mx) = (bounds.getDouble(0), bounds.getDouble(1))
-      val width = (mx - mn) / cells
-      val cell =
-        if (mx == mn) lit(0L)
-        else least(lit(cells - 1L), floor((col("_v") - lit(mn)) / lit(width)))
-      val cen = census.withColumn("_c", cell)
-      // per-cell negative totals -> broadcast offsets (config-sized rows)
-      val perCell = cen.groupBy(col("_c")).agg(sum(col("_neg")).as("_nc"))
-      val offs = perCell.withColumn("_off",
-        coalesce(sum(col("_nc")).over(
-          W.orderBy(col("_c")).rowsBetween(W.unboundedPreceding, -1)), lit(0L)))
-      // within-cell prefix, cell-partitioned — parallel in `cells`
-      val wCell = W.partitionBy(col("_c")).orderBy(col("_v"))
-        .rowsBetween(W.unboundedPreceding, -1)
-      cen.join(broadcast(offs.select(col("_c"), col("_off"))), Seq("_c"))
-        .withColumn("_cumNeg",
-          col("_off") + coalesce(sum(col("_neg")).over(wCell), lit(0L)))
-    }
+    val ranked = RankedPrefix(census, keys, sums,
+      direct = bounds.getLong(2) <= directWindowRows,
+      mn = bounds.getDouble(0), mx = bounds.getDouble(1), cells = cells,
+      offsetRows = perCell => if (grouped) perCell.count() else cells.toLong,
+      descending = descending, exclusive = exclusive,
+      broadcastRowLimit = broadcastRowLimit)
     Some((ranked, censusAll))
   }
+
+  /** The distinct-score census with the EXCLUSIVE ascending
+    * cumulative-negative prefix `_cumNeg`, shared by the AUC and
+    * Mann–Whitney forms ([[aucExact]], [[aucExactWeighted]],
+    * [[rankSumTest]] and their grouped siblings) over a prepared
+    * (_g?, _v, _pw, _nw) mass frame. See [[rankedCensus]].
+    */
+  private[graft] def rankedMass(
+      nn: DataFrame, grouped: Boolean, cells: Int,
+      broadcastRowLimit: Long = Limits.BroadcastRowLimit,
+      directWindowRows: Long = RankedPrefix.DefaultDirectWindowRows)
+      : Option[(DataFrame, DataFrame)] =
+    rankedCensus(nn, grouped, col("_pw"), col("_nw"), Seq("_cumNeg" -> col("_neg")),
+      descending = false, exclusive = true, cells, broadcastRowLimit, directWindowRows)
 
   /** The AUC finisher over [[rankedMass]]'s frame: DECIMAL(38,0)
     * Mann–Whitney numerator, one stated division.
@@ -307,7 +285,7 @@ object Evaluation {
       .select(score.cast("double").as("_v"),
         when(label.cast("boolean"), 1L).otherwise(0L).as("_pw"),
         when(label.cast("boolean"), 0L).otherwise(1L).as("_nw"))
-    rankedMass(nn, cells) match {
+    rankedMass(nn, grouped = false, cells) match {
       case None =>
         nn.sparkSession.range(1).select(
           lit(0L).as("n_pos"), lit(0L).as("n_neg"),
@@ -362,11 +340,11 @@ object Evaluation {
     * Same one-scan discipline: ONE (group, score) census, bounds from
     * the census, prefix windows partitioned by (group, cell) so no
     * group ever ranks in a single task, offsets at groups×cells rows
-    * broadcast ADAPTIVELY ([[broadcastIfSmall]]: config-sized for the
-    * dashboard-cardinality groups this targets — languages, sources,
-    * shards — and automatically a shuffled join past
-    * [[BroadcastRowLimit]], so a million-group column degrades
-    * instead of OOMing the driver). Output: one row per group
+    * broadcast ADAPTIVELY ([[graft.Limits.broadcastIfSmall]]:
+    * config-sized for the dashboard-cardinality groups this targets —
+    * languages, sources, shards — and automatically a shuffled join
+    * past [[graft.Limits.BroadcastRowLimit]], so a million-group
+    * column degrades instead of OOMing the driver). Output: one row per group
     * (group_key, n_pos, n_neg, n_distinct_scores, auc); auc is NULL
     * for single-class groups, and groups with no surviving rows do
     * not appear.
@@ -374,8 +352,8 @@ object Evaluation {
   def aucExactBy(
       df: DataFrame, group: Column, score: Column, label: Column,
       cells: Int = 4096,
-      broadcastRowLimit: Long = BroadcastRowLimit,
-      directWindowRows: Long = StatTests.DefaultDirectWindowRows): DataFrame = {
+      broadcastRowLimit: Long = Limits.BroadcastRowLimit,
+      directWindowRows: Long = RankedPrefix.DefaultDirectWindowRows): DataFrame = {
     // label/group filters run on raw rows (cheap columns); the score
     // null/NaN exclusion runs census-side so an expensive score
     // expression is evaluated exactly once per row — see [[aucExact]]
@@ -395,7 +373,7 @@ object Evaluation {
   def aucExactWeightedBy(
       df: DataFrame, group: Column, score: Column, label: Column,
       weight: Column, cells: Int = 4096,
-      broadcastRowLimit: Long = BroadcastRowLimit): DataFrame = {
+      broadcastRowLimit: Long = Limits.BroadcastRowLimit): DataFrame = {
     val w = weight.cast("long")
     val nn = df
       .filter(label.isNotNull && group.isNotNull && w.isNotNull && w > 0L)
@@ -411,8 +389,8 @@ object Evaluation {
     */
   private def aucMassCoreBy(
       nn: DataFrame, cells: Int, broadcastRowLimit: Long,
-      directWindowRows: Long = StatTests.DefaultDirectWindowRows): DataFrame =
-    rankedMassBy(nn, cells, broadcastRowLimit, directWindowRows) match {
+      directWindowRows: Long = RankedPrefix.DefaultDirectWindowRows): DataFrame =
+    rankedMass(nn, grouped = true, cells, broadcastRowLimit, directWindowRows) match {
       case None =>
         nn.limit(0).select(col("_g").as("group_key"),
           lit(0L).as("n_pos"), lit(0L).as("n_neg"),
@@ -421,70 +399,7 @@ object Evaluation {
       case Some((ranked, censusAll)) => aucFinishBy(ranked, censusAll)
     }
 
-  /** Grouped sibling of [[rankedMass]]: the (group, score) census with
-    * the `(_g, _c)`-partitioned cumulative-negative prefix shared by
-    * [[aucExactBy]]/[[aucExactWeightedBy]] and [[rankSumTestBy]].
-    * Returns None when the census is empty (cache already released);
-    * otherwise the caller owns the census release.
-    */
-  private[graft] def rankedMassBy(
-      nn: DataFrame, cells: Int,
-      broadcastRowLimit: Long,
-      directWindowRows: Long = StatTests.DefaultDirectWindowRows)
-      : Option[(DataFrame, DataFrame)] = {
-    require(cells >= 1, s"cells must be >= 1, got $cells")
-    val W = org.apache.spark.sql.expressions.Window
-    val censusAll = nn.groupBy(col("_g"), col("_v"))
-      .agg(sum(col("_pw")).as("_pos"),
-        sum(col("_nw")).as("_neg"))
-      .persistCensus()
-    val census = censusAll.filter(col("_v").isNotNull && !isnan(col("_v")))
-    val bounds = census.agg(min(col("_v")).as("mn"), max(col("_v")).as("mx"),
-      count(lit(1)).as("n")).head()
-    if (bounds.getLong(2) == 0L) {
-      censusAll.unpersist(blocking = false)
-      return None
-    }
-    val ranked = if (bounds.getLong(2) <= directWindowRows) {
-      // direct path (census fits bounded group windows — see
-      // StatTests.DefaultDirectWindowRows): per-group exclusive prefix
-      // in one group-partitioned window — no cell/offset apparatus and
-      // no offset-cardinality count job; same exact Long sums
-      census.withColumn("_cumNeg",
-        coalesce(sum(col("_neg")).over(
-          W.partitionBy(col("_g")).orderBy(col("_v"))
-            .rowsBetween(W.unboundedPreceding, -1)), lit(0L)))
-    } else {
-      // GLOBAL bounds are fine for the cells: the cell split only
-      // controls window parallelism; ranks come from (_g, _c, _v)
-      val (mn, mx) = (bounds.getDouble(0), bounds.getDouble(1))
-      val width = (mx - mn) / cells
-      val cell =
-        if (mx == mn) lit(0L)
-        else least(lit(cells - 1L), floor((col("_v") - lit(mn)) / lit(width)))
-      val cen = census.withColumn("_c", cell)
-      val perCell = cen.groupBy(col("_g"), col("_c")).agg(sum(col("_neg")).as("_nc"))
-      val offs = perCell.withColumn("_off",
-        coalesce(sum(col("_nc")).over(W.partitionBy(col("_g")).orderBy(col("_c"))
-          .rowsBetween(W.unboundedPreceding, -1)), lit(0L)))
-      // cardinality-adaptive: the offsets table is groups×cells rows —
-      // counting it rides the persisted census (cheap); above the limit
-      // the broadcast hint is dropped and the join shuffles instead of
-      // OOMing the driver on a million-group column
-      val offRows = perCell.count()
-      val wCell = W.partitionBy(col("_g"), col("_c")).orderBy(col("_v"))
-        .rowsBetween(W.unboundedPreceding, -1)
-      cen
-        .join(broadcastIfSmall(offs.select(col("_g"), col("_c"), col("_off")),
-            offRows, broadcastRowLimit),
-          Seq("_g", "_c"))
-        .withColumn("_cumNeg",
-          col("_off") + coalesce(sum(col("_neg")).over(wCell), lit(0L)))
-    }
-    Some((ranked, censusAll))
-  }
-
-  /** The per-group AUC finisher over [[rankedMassBy]]'s frame. */
+  /** The per-group AUC finisher over [[rankedMass]]'s frame. */
   private def aucFinishBy(ranked: DataFrame, censusAll: DataFrame): DataFrame = {
     val out = ranked.groupBy(col("_g").as("group_key")).agg(
       sum(col("_pos")).as("n_pos"),
@@ -509,7 +424,7 @@ object Evaluation {
     * group column over the shared domain: "is the gate's separation
     * more than chance on EVERY source, or does one source's apparent
     * skill vanish at its sample size?" (the per-source AUC q124 says
-    * how big; this says how sure). Shares [[rankedMassBy]] with
+    * how big; this says how sure). Shares [[rankedMass]] with
     * [[aucExactBy]] — one census, one prefix machinery, the grouped
     * tie term and z finished per group with the identical engine-exact
     * dag as the solo form. Output: one row per group (group_key,
@@ -520,13 +435,13 @@ object Evaluation {
   def rankSumTestBy(
       df: DataFrame, group: Column, score: Column, label: Column,
       cells: Int = 4096,
-      broadcastRowLimit: Long = BroadcastRowLimit): DataFrame = {
+      broadcastRowLimit: Long = Limits.BroadcastRowLimit): DataFrame = {
     val nn = df
       .filter(label.isNotNull && group.isNotNull)
       .select(group.as("_g"), score.cast("double").as("_v"),
         when(label.cast("boolean"), 1L).otherwise(0L).as("_pw"),
         when(label.cast("boolean"), 0L).otherwise(1L).as("_nw"))
-    rankedMassBy(nn, cells, broadcastRowLimit) match {
+    rankedMass(nn, grouped = true, cells, broadcastRowLimit) match {
       case None =>
         nn.limit(0).select(col("_g").as("group_key"),
           lit(0L).as("n_pos"), lit(0L).as("n_neg"),
@@ -804,12 +719,9 @@ object Evaluation {
 
   /** The descending-rank census core shared by [[averagePrecisionExact]]
     * and [[averagePrecisionBy]]: ONE raw scan collapsed to a persisted
-    * (group?, score → pos, neg) census, then the descending cumulative
-    * positives/total at every distinct score via the [[aucExact]] cell
-    * machinery run in reverse — per-cell totals offset a window
-    * partitioned by (group?, cell), so billions of distinct scores rank
-    * `cells`-way parallel with no global sort and no unpartitioned
-    * window over data-sized input.
+    * (group?, score → pos, neg) census ([[rankedCensus]]), then the
+    * descending cumulative positives/total at every distinct score —
+    * the [[aucExact]] prefix run in reverse.
     *
     * Returns (ranked, censusAll) where `ranked` carries `_pos`, `_neg`,
     * `_cumPos`, `_cumN` (both INCLUSIVE of the current score block,
@@ -817,11 +729,11 @@ object Evaluation {
     * census the caller must release via [[graft.CacheLifecycle]].
     * Returns None when the census is empty (no surviving rows).
     */
-  private def descRankedCensus(
+  private[graft] def descRankedCensus(
       df: DataFrame, group: Option[Column], score: Column, label: Column,
-      cells: Int, broadcastRowLimit: Long): Option[(DataFrame, DataFrame)] = {
-    require(cells >= 1, s"cells must be >= 1, got $cells")
-    val W = org.apache.spark.sql.expressions.Window
+      cells: Int, broadcastRowLimit: Long,
+      directWindowRows: Long = RankedPrefix.DefaultDirectWindowRows)
+      : Option[(DataFrame, DataFrame)] = {
     // label/group filters run on raw rows (cheap columns); the score
     // null/NaN exclusion runs census-side so an expensive score
     // expression is evaluated exactly once per row — see [[aucExact]]
@@ -831,68 +743,9 @@ object Evaluation {
       .select(group.map(_.as("_g")).toSeq ++ Seq(
         score.cast("double").as("_v"),
         when(label.cast("boolean"), 1L).otherwise(0L).as("_p")): _*)
-    val gcols = group.map(_ => col("_g")).toSeq
-    val censusAll = nn.groupBy(gcols :+ col("_v"): _*)
-      .agg(sum(col("_p")).as("_pos"),
-        sum(lit(1L) - col("_p")).as("_neg"))
-      .persistCensus()
-    val census = censusAll.filter(col("_v").isNotNull && !isnan(col("_v")))
-    val bounds = census.agg(min(col("_v")).as("mn"), max(col("_v")).as("mx"),
-      count(lit(1)).as("n")).head()
-    if (bounds.getLong(2) == 0L) {
-      censusAll.unpersist(blocking = false)
-      return None
-    }
-    val ranked = if (bounds.getLong(2) <= StatTests.DefaultDirectWindowRows) {
-      // direct path (census fits bounded windows — see
-      // StatTests.DefaultDirectWindowRows): the inclusive DESCENDING
-      // cumulatives in one (group?-partitioned) window — no
-      // cell/offset apparatus, no offset-cardinality count job; same
-      // exact Long sums
-      val wd = (group match {
-        case Some(_) => W.partitionBy(col("_g")).orderBy(col("_v").desc)
-        case None    => W.orderBy(col("_v").desc)
-      }).rowsBetween(W.unboundedPreceding, W.currentRow)
-      census
-        .withColumn("_cumPos", sum(col("_pos")).over(wd))
-        .withColumn("_cumN", sum(col("_pos") + col("_neg")).over(wd))
-    } else {
-      // GLOBAL bounds are fine for the cells: the cell split only
-      // controls window parallelism; ranks come from (_g?, _c, _v)
-      val (mn, mx) = (bounds.getDouble(0), bounds.getDouble(1))
-      val width = (mx - mn) / cells
-      val cell =
-        if (mx == mn) lit(0L)
-        else least(lit(cells - 1L), floor((col("_v") - lit(mn)) / lit(width)))
-      val cen = census.withColumn("_c", cell)
-      // per-cell totals -> DESCENDING offsets (mass strictly above the
-      // cell); groups×cells rows, cardinality-adaptive broadcast
-      val perCell = cen.groupBy(gcols :+ col("_c"): _*)
-        .agg(sum(col("_pos")).as("_pc"),
-          sum(col("_pos") + col("_neg")).as("_tc"))
-      val wOff = group match {
-        case Some(_) => W.partitionBy(col("_g")).orderBy(col("_c").desc)
-          .rowsBetween(W.unboundedPreceding, -1)
-        case None => W.orderBy(col("_c").desc)
-          .rowsBetween(W.unboundedPreceding, -1)
-      }
-      val offs = perCell
-        .withColumn("_offPos", coalesce(sum(col("_pc")).over(wOff), lit(0L)))
-        .withColumn("_offTot", coalesce(sum(col("_tc")).over(wOff), lit(0L)))
-        .select(gcols ++ Seq(col("_c"), col("_offPos"), col("_offTot")): _*)
-      val offRows = group.map(_ => perCell.count()).getOrElse(cells.toLong)
-      // within-cell INCLUSIVE descending cumulative, (group?, cell)-
-      // partitioned — parallel in groups×cells
-      val wCell = W.partitionBy(gcols :+ col("_c"): _*).orderBy(col("_v").desc)
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-      val joinKeys = group.map(_ => Seq("_g", "_c")).getOrElse(Seq("_c"))
-      cen
-        .join(broadcastIfSmall(offs, offRows, broadcastRowLimit), joinKeys)
-        .withColumn("_cumPos", col("_offPos") + sum(col("_pos")).over(wCell))
-        .withColumn("_cumN",
-          col("_offTot") + sum(col("_pos") + col("_neg")).over(wCell))
-    }
-    Some((ranked, censusAll))
+    rankedCensus(nn, group.isDefined, col("_p"), lit(1L) - col("_p"),
+      Seq("_cumPos" -> col("_pos"), "_cumN" -> (col("_pos") + col("_neg"))),
+      descending = true, exclusive = false, cells, broadcastRowLimit, directWindowRows)
   }
 
   /** Exact average precision (area under the precision–recall curve,
@@ -931,7 +784,7 @@ object Evaluation {
   def averagePrecisionExact(
       df: DataFrame, score: Column, label: Column,
       cells: Int = 4096): DataFrame = {
-    descRankedCensus(df, None, score, label, cells, BroadcastRowLimit) match {
+    descRankedCensus(df, None, score, label, cells, Limits.BroadcastRowLimit) match {
       case None =>
         df.sparkSession.range(1).select(
           lit(0L).as("n_pos"), lit(0L).as("n_neg"),
@@ -963,7 +816,7 @@ object Evaluation {
     * on the PR side (a gate's ROC AUC can hold per source while its
     * precision collapses on the source whose base rate is 100× lower —
     * exactly the failure AP per source surfaces). Same one-scan census,
-    * (group, cell)-partitioned descending ranks, cardinality-adaptive
+    * group-keyed descending [[RankedPrefix]] ranks, cardinality-adaptive
     * offsets broadcast. Output: one row per group (group_key, n_pos,
     * n_neg, n_distinct_scores, ap); groups with no surviving rows are
     * absent, ap NULL for positive-free groups.
@@ -971,7 +824,7 @@ object Evaluation {
   def averagePrecisionBy(
       df: DataFrame, group: Column, score: Column, label: Column,
       cells: Int = 4096,
-      broadcastRowLimit: Long = BroadcastRowLimit): DataFrame = {
+      broadcastRowLimit: Long = Limits.BroadcastRowLimit): DataFrame = {
     descRankedCensus(df, Some(group), score, label, cells,
         broadcastRowLimit) match {
       case None =>

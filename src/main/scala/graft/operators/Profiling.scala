@@ -800,11 +800,7 @@ object Profiling {
     if (bounds.isNullAt(0))
       return nn.drop("_v").withColumn("bin", lit(1L)).limit(0)
     val (mn, mx) = (bounds.getDouble(0), bounds.getDouble(1))
-    val width = (mx - mn) / cells
-    val cell =
-      if (mx == mn) lit(0L)
-      else least(lit(cells - 1L), floor((col("_v") - lit(mn)) / lit(width)))
-    val base = nn.withColumn("_c", cell)
+    val base = nn.withColumn("_c", RankedPrefix.cellIndex(col("_v"), mn, mx, cells))
     val perCell = base.groupBy(col("_c")).agg(count(lit(1)).as("_nc"))
     val wCells = W.orderBy(col("_c")).rowsBetween(W.unboundedPreceding, -1)
     val offs = perCell
@@ -864,11 +860,7 @@ object Profiling {
       return nn.select(col("_g").as("group_key"),
         lit(0.0).as("p"), lit(0L).as("n"), col("_v").as("quantile")).limit(0)
     val (mn, mx) = (bounds.getDouble(0), bounds.getDouble(1))
-    val width = (mx - mn) / cells
-    val cell =
-      if (mx == mn) lit(0L)
-      else least(lit(cells - 1L), floor((col("_v") - lit(mn)) / lit(width)))
-    val base = nn.withColumn("_c", cell)
+    val base = nn.withColumn("_c", RankedPrefix.cellIndex(col("_v"), mn, mx, cells))
     val wCells = W.partitionBy(col("_og")).orderBy(col("_oc"))
       .rowsBetween(W.unboundedPreceding, -1)
     val offs = base
@@ -914,20 +906,26 @@ object Profiling {
     * IEEE ops both engines state identically (the single sqrt keeps
     * ρ = ±1 exact whenever Σaa·Σbb squares without rounding).
     *
-    * Distribution: each column ranks via the [[equalFrequencyBins]] /
-    * AUC census machinery — distinct-value census, per-cell totals
-    * broadcast as offsets, within-cell prefix windows partitioned BY
-    * cell — so a billion distinct values rank `cells`-way parallel
-    * with no global sort; rows then join their value's midrank back
+    * Distribution: each column ranks via an exclusive [[RankedPrefix]]
+    * over its distinct-value census — cell-partitioned past the
+    * direct-window gate, so a billion distinct values rank `cells`-way
+    * parallel with no global sort; rows then join their value's midrank back
     * by equi-join. Rows with NULL/NaN in EITHER column are excluded
     * (a pair is ranked or it isn't). Output: one row (n, spearman_rho);
     * rho NULL when either column is constant (undefined, not 0) or
     * the input is empty.
     */
   def spearmanCorr(
-      df: DataFrame, x: Column, y: Column, cells: Int = 4096): DataFrame = {
+      df: DataFrame, x: Column, y: Column, cells: Int = 4096): DataFrame =
+    spearmanCorr(df, x, y, cells, RankedPrefix.DefaultDirectWindowRows)
+
+  /** [[spearmanCorr]] with the direct-path gate exposed, so specs can
+    * force either [[RankedPrefix]] path.
+    */
+  private[graft] def spearmanCorr(
+      df: DataFrame, x: Column, y: Column, cells: Int,
+      directWindowRows: Long): DataFrame = {
     require(cells >= 1, s"cells must be >= 1, got $cells")
-    val W = org.apache.spark.sql.expressions.Window
     // persist the raw PROJECTION and filter ABOVE the cache: the
     // pairwise null/NaN exclusion references the derived columns, and
     // a raw-row filter on them would push below the projection with
@@ -947,32 +945,12 @@ object Profiling {
         count(lit(1)).as("k")).head()
       if (bounds.getLong(2) == 0L)
         return census.select(col("_v").as(outV), lit(0L).as(outR)).limit(0)
-      val cum = if (bounds.getLong(2) <= StatTests.DefaultDirectWindowRows) {
-        // direct path (census fits one bounded window task): the
-        // exclusive prefix in one window — same exact Long sums, no
-        // cell/offset apparatus (see StatTests.DefaultDirectWindowRows)
-        census.withColumn("_cumBelow",
-          coalesce(sum(col("_cnt")).over(
-            W.orderBy(col("_v")).rowsBetween(W.unboundedPreceding, -1)), lit(0L)))
-      } else {
-        val (mn, mx) = (bounds.getDouble(0), bounds.getDouble(1))
-        val width = (mx - mn) / cells
-        val cell =
-          if (mx == mn) lit(0L)
-          else least(lit(cells - 1L), floor((col("_v") - lit(mn)) / lit(width)))
-        val cen = census.withColumn("_c", cell)
-        val perCell = cen.groupBy(col("_c")).agg(sum(col("_cnt")).as("_nc"))
-        val offs = perCell.withColumn("_off",
-          coalesce(sum(col("_nc")).over(
-            W.orderBy(col("_c")).rowsBetween(W.unboundedPreceding, -1)), lit(0L)))
-        val wCell = W.partitionBy(col("_c")).orderBy(col("_v"))
-          .rowsBetween(W.unboundedPreceding, -1)
-        cen.join(broadcast(offs.select(col("_c"), col("_off"))), Seq("_c"))
-          .withColumn("_cumBelow",
-            col("_off") + coalesce(sum(col("_cnt")).over(wCell), lit(0L)))
-      }
-      cum.select(col("_v").as(outV),
-        (lit(2L) * col("_cumBelow") + col("_cnt") + lit(1L)).as(outR))
+      RankedPrefix(census, Nil, Seq("_cumBelow" -> col("_cnt")),
+          direct = bounds.getLong(2) <= directWindowRows,
+          mn = bounds.getDouble(0), mx = bounds.getDouble(1), cells = cells,
+          offsetRows = _ => cells.toLong, exclusive = true)
+        .select(col("_v").as(outV),
+          (lit(2L) * col("_cumBelow") + col("_cnt") + lit(1L)).as(outR))
     }
     val xr = midranks2("_x", "_xv", "_ax")
     val yr = midranks2("_y", "_yv", "_ay")
@@ -1002,9 +980,9 @@ object Profiling {
   /** Per-group exact Spearman ρ — [[spearmanCorr]] keyed by a group
     * column: "is the gate a length proxy on SOME source?" answered
     * per source. Same doubled-midrank exactness, per group: the
-    * (group, value) census ranks within its group via (group, cell)-
-    * partitioned prefix windows (global value bounds set the cells —
-    * they only control parallelism), the per-group doubled-rank mean
+    * (group, value) census ranks within its group via a group-keyed
+    * [[RankedPrefix]] (global value bounds set the cells — they only
+    * control parallelism), the per-group doubled-rank mean
     * is exactly N_g + 1, and the centered sums accumulate per group
     * in DECIMAL(38,0). Offsets/rank broadcasts are cardinality-
     * adaptive on a census-derived groups×cells upper bound (the
@@ -1015,17 +993,23 @@ object Profiling {
   def spearmanCorrBy(
       df: DataFrame, group: Column, x: Column, y: Column,
       cells: Int = 4096,
-      broadcastRowLimit: Long = Limits.BroadcastRowLimit): DataFrame = {
+      broadcastRowLimit: Long = Limits.BroadcastRowLimit): DataFrame =
+    spearmanCorrBy(df, group, x, y, cells, broadcastRowLimit,
+      RankedPrefix.DefaultDirectWindowRows)
+
+  /** [[spearmanCorrBy]] with the direct-path gate exposed, so specs can
+    * force either [[RankedPrefix]] path.
+    */
+  private[graft] def spearmanCorrBy(
+      df: DataFrame, group: Column, x: Column, y: Column, cells: Int,
+      broadcastRowLimit: Long, directWindowRows: Long): DataFrame = {
     require(cells >= 1, s"cells must be >= 1, got $cells")
-    val W = org.apache.spark.sql.expressions.Window
     val raw = df
       .select(group.as("_g"), x.cast("double").as("_x"), y.cast("double").as("_y"))
       .persistFresh()
     val nn = raw.filter(col("_g").isNotNull &&
       col("_x").isNotNull && !isnan(col("_x")) &&
       col("_y").isNotNull && !isnan(col("_y")))
-    def bcIfSmall(f: DataFrame, rows: Long): DataFrame =
-      if (rows <= broadcastRowLimit) broadcast(f) else f
     // ONE stats job feeds both columns' cells, the empty check, and
     // the adaptive-broadcast group count (probe-folding discipline)
     val stats = nn.agg(
@@ -1044,31 +1028,13 @@ object Profiling {
       val census = nn.groupBy(col("_g"), col(c).as("_v"))
         .agg(count(lit(1)).as("_cnt"))
       // the row count k (≥ census rows) rode the stats job: the direct
-      // gate costs no extra probe (StatTests.DefaultDirectWindowRows)
-      val cum = if (stats.getLong(4) <= StatTests.DefaultDirectWindowRows) {
-        census.withColumn("_cumBelow",
-          coalesce(sum(col("_cnt")).over(
-            W.partitionBy(col("_g")).orderBy(col("_v"))
-              .rowsBetween(W.unboundedPreceding, -1)), lit(0L)))
-      } else {
-        val width = (mx - mn) / cells
-        val cell =
-          if (mx == mn) lit(0L)
-          else least(lit(cells - 1L), floor((col("_v") - lit(mn)) / lit(width)))
-        val cen = census.withColumn("_c", cell)
-        val perCell = cen.groupBy(col("_g"), col("_c")).agg(sum(col("_cnt")).as("_nc"))
-        val offs = perCell.withColumn("_off",
-          coalesce(sum(col("_nc")).over(W.partitionBy(col("_g")).orderBy(col("_c"))
-            .rowsBetween(W.unboundedPreceding, -1)), lit(0L)))
-        val wCell = W.partitionBy(col("_g"), col("_c")).orderBy(col("_v"))
-          .rowsBetween(W.unboundedPreceding, -1)
-        cen.join(bcIfSmall(offs.select(col("_g"), col("_c"), col("_off")),
-            ng * cells), Seq("_g", "_c"))
-          .withColumn("_cumBelow",
-            col("_off") + coalesce(sum(col("_cnt")).over(wCell), lit(0L)))
-      }
-      cum.select(col("_g").as(gOut), col("_v").as(outV),
-        (lit(2L) * col("_cumBelow") + col("_cnt") + lit(1L)).as(outR))
+      // gate costs no extra probe
+      RankedPrefix(census, Seq("_g"), Seq("_cumBelow" -> col("_cnt")),
+          direct = stats.getLong(4) <= directWindowRows, mn = mn, mx = mx,
+          cells = cells, offsetRows = _ => ng * cells, exclusive = true,
+          broadcastRowLimit = broadcastRowLimit)
+        .select(col("_g").as(gOut), col("_v").as(outV),
+          (lit(2L) * col("_cumBelow") + col("_cnt") + lit(1L)).as(outR))
     }
     val xr = midranks2By("_x", stats.getDouble(0), stats.getDouble(1),
       "_gx", "_xv", "_ax")
@@ -1078,7 +1044,8 @@ object Profiling {
     val joined = nn
       .join(xr, col("_g") === col("_gx") && col("_x") === col("_xv"))
       .join(yr, col("_g") === col("_gy") && col("_y") === col("_yv"))
-      .join(bcIfSmall(totals, ng), col("_g") === col("_gt"))
+      .join(Limits.broadcastIfSmall(totals, ng, broadcastRowLimit),
+        col("_g") === col("_gt"))
     val dev = joined.select(col("_g"),
       (col("_ax") - col("_n") - lit(1L)).cast("decimal(38,0)").as("_da"),
       (col("_ay") - col("_n") - lit(1L)).cast("decimal(38,0)").as("_db"))
@@ -1236,8 +1203,6 @@ object Profiling {
       .agg(count(lit(1)).as("_n"))
       .persistCensus()
     val ng = census.agg(countDistinct(col("_g"))).head().getLong(0)
-    def bcIfSmall(f: DataFrame, rows: Long): DataFrame =
-      if (rows <= broadcastRowLimit) broadcast(f) else f
     val spark = df.sparkSession
     val grid = spark.range(0, binsX).select(col("id").as("_bx"))
       .crossJoin(broadcast(spark.range(0, binsY).select(col("id").as("_by"))))
@@ -1273,9 +1238,11 @@ object Profiling {
           .cast("decimal(38,0)").as(out))
     }
     val joined = concDisc
-      .join(bcIfSmall(margTie2("_bx", "_tx2"), ng), col("_g") === col("_gm"))
+      .join(Limits.broadcastIfSmall(margTie2("_bx", "_tx2"), ng, broadcastRowLimit),
+        col("_g") === col("_gm"))
       .drop("_gm")
-      .join(bcIfSmall(margTie2("_by", "_ty2"), ng), col("_g") === col("_gm"))
+      .join(Limits.broadcastIfSmall(margTie2("_by", "_ty2"), ng, broadcastRowLimit),
+        col("_g") === col("_gm"))
       .drop("_gm")
     val dn = col("n").cast("double")
     val dx = (dn * (dn - lit(1.0)) - col("_tx2").cast("double")) / lit(2.0)
@@ -1354,12 +1321,9 @@ object Profiling {
     }
     val (mnX, mxX) = (stats.getDouble(0), stats.getDouble(1))
     val (mnY, mxY) = (stats.getDouble(2), stats.getDouble(3))
-    def cellOf(c: Column, mn: Double, mx: Double): Column =
-      if (mx == mn) lit(0L)
-      else least(lit(cells - 1L), floor((c - lit(mn)) / lit((mx - mn) / cells)))
     val cen = census
-      .withColumn("_cx", cellOf(col("_x"), mnX, mxX))
-      .withColumn("_cy", cellOf(col("_y"), mnY, mxY))
+      .withColumn("_cx", RankedPrefix.cellIndex(col("_x"), mnX, mxX, cells))
+      .withColumn("_cy", RankedPrefix.cellIndex(col("_y"), mnY, mxY, cells))
       .persistFresh()
     val dec = (c: Column) => c.cast("decimal(38,0)")
     val one = lit(1L).cast("decimal(38,0)")
@@ -1520,8 +1484,6 @@ object Profiling {
     val (mnX, mxX) = (stats.getDouble(0), stats.getDouble(1))
     val (mnY, mxY) = (stats.getDouble(2), stats.getDouble(3))
     val ng = stats.getLong(4)
-    def bcIfSmall(f: DataFrame, rows: Long): DataFrame =
-      if (rows <= broadcastRowLimit) broadcast(f) else f
     def cellOf(c: Column, mn: Double, mx: Double): Column =
       if (mx == mn) lit(0L)
       else least(lit(cells - 1L), greatest(lit(0L),
@@ -1602,7 +1564,8 @@ object Profiling {
 
     def joinG(a: DataFrame, b: DataFrame): DataFrame = {
       val withKey = if (b.columns.contains("_gm")) b else b.withColumnRenamed("_g", "_gm")
-      a.join(bcIfSmall(withKey, ng), col("_g") === col("_gm"), "left").drop("_gm")
+      a.join(Limits.broadcastIfSmall(withKey, ng, broadcastRowLimit),
+        col("_g") === col("_gm"), "left").drop("_gm")
     }
     val joined = joinG(joinG(joinG(joinG(joinG(
       domA, aggB), aggC),

@@ -658,11 +658,7 @@ object Sampling {
       return ids.select(col("_id").as("anchor_id"), lit(0L).as("draw"),
         col("_id").as("neg_id")).limit(0)
     val (mn, mx, n) = (bounds.getDouble(0), bounds.getDouble(1), bounds.getLong(2))
-    val width = (mx - mn) / cells
-    val cell =
-      if (mx == mn) lit(0L)
-      else least(lit(cells - 1L), floor((orderKey - lit(mn)) / lit(width)))
-    val base = ids.withColumn("_c", cell)
+    val base = ids.withColumn("_c", RankedPrefix.cellIndex(orderKey, mn, mx, cells))
     val offs = base.groupBy(col("_c")).agg(count(lit(1)).as("_nc"))
       .withColumn("_off", coalesce(sum(col("_nc")).over(
         W.orderBy(col("_c")).rowsBetween(W.unboundedPreceding, -1)), lit(0L)))

@@ -43,13 +43,12 @@ object StatTests {
     * Distribution (the [[Evaluation.aucExact]] census machinery): rows
     * collapse to a (value → countA, countB) census in one
     * map-side-partial shuffle — the only scan of the input. The
-    * cumulative counts use the cell trick: per-cell totals (≤ `cells`
-    * rows, a bounded window) offset an INCLUSIVE running sum
-    * partitioned BY cell, so a census with billions of distinct values
-    * ranks `cells`-way parallel — no unpartitioned window task
-    * anywhere. The ECDF is right-continuous, so the sup over all x is
-    * attained at a data point with the inclusive prefix — which is
-    * exactly what the per-distinct-value inclusive sums give.
+    * cumulative counts are [[RankedPrefix]] INCLUSIVE running sums,
+    * cell-partitioned past the direct-window gate, so a census with
+    * billions of distinct values ranks `cells`-way parallel. The
+    * ECDF is right-continuous, so the sup over all x is attained at a
+    * data point with the inclusive prefix — which is exactly what the
+    * per-distinct-value inclusive sums give.
     *
     * Every cumulative count is an exact Long; F_A(x) = cumA/|A| is one
     * IEEE division of exactly-converted operands, the gap one
@@ -69,30 +68,11 @@ object StatTests {
     * in a CDF). If either cohort is empty the statistic columns are
     * NULL — the test is undefined, not 0.
     */
-  /** Census cardinality at or under which the KS family computes its
-    * cumulative prefixes with a DIRECT window (unpartitioned for the
-    * solo form, group-partitioned for the grouped forms) instead of
-    * the cell/offset apparatus — the cardinality-adaptive convention
-    * (the adaptive-broadcast / small-graph-driver pattern). The cell
-    * trick exists solely for intra-partition parallelism on a census
-    * with billions of distinct values; the prefix sums are exact Long
-    * additions either way, so BOTH paths produce bit-identical
-    * statistics (spec-pinned by forcing each path). Under the limit
-    * the direct form removes, per call: the per-cell totals aggregate,
-    * the offsets window, their broadcast build, and the offset rejoin
-    * — a chain of serial AQE stage-materialization jobs each worth
-    * ~50–100 ms at bench scale (JobProfile r21). 1M census rows is a
-    * few tens of MB in one window task — the same order as the
-    * engine's broadcast limit.
-    */
-  val DefaultDirectWindowRows: Long = 1L << 20
-
   def ksTwoSample(
       df: DataFrame, value: Column, inA: Column,
       cells: Int = 4096,
-      directWindowRows: Long = DefaultDirectWindowRows): DataFrame = {
+      directWindowRows: Long = RankedPrefix.DefaultDirectWindowRows): DataFrame = {
     require(cells >= 1, s"cells must be >= 1, got $cells")
-    val W = org.apache.spark.sql.expressions.Window
     val spark = df.sparkSession
     // value census FIRST: one raw scan persisted at distinct-value
     // scale; bounds, totals, cells, and both prefix branches ride the
@@ -126,40 +106,10 @@ object StatTests {
     }
     val (mn, mx) = (stats.getDouble(0), stats.getDouble(1))
     val nd = stats.getLong(4)
-    val ranked = if (nd <= directWindowRows) {
-      // direct path (census fits one window task): the inclusive
-      // prefixes in ONE bounded unpartitioned window — same exact Long
-      // sums, none of the cell/offset machinery
-      val wd = W.orderBy(col("_v")).rowsBetween(W.unboundedPreceding, 0)
-      census
-        .withColumn("_ca", sum(col("_na")).over(wd))
-        .withColumn("_cb", sum(col("_nb")).over(wd))
-    } else {
-      val width = (mx - mn) / cells
-      val cell =
-        if (mx == mn) lit(0L)
-        else least(lit(cells - 1L), floor((col("_v") - lit(mn)) / lit(width)))
-      val cen = census.withColumn("_c", cell)
-      // per-cell cohort totals -> broadcast offsets (≤ `cells` rows;
-      // the lone unpartitioned window is bounded by construction)
-      val perCell = cen.groupBy(col("_c"))
-        .agg(sum(col("_na")).as("_tca"), sum(col("_nb")).as("_tcb"))
-      val offs = perCell
-        .withColumn("_offa",
-          coalesce(sum(col("_tca")).over(
-            W.orderBy(col("_c")).rowsBetween(W.unboundedPreceding, -1)), lit(0L)))
-        .withColumn("_offb",
-          coalesce(sum(col("_tcb")).over(
-            W.orderBy(col("_c")).rowsBetween(W.unboundedPreceding, -1)), lit(0L)))
-      // within-cell INCLUSIVE prefix, cell-partitioned — the ECDF at
-      // each distinct value; parallel in `cells`
-      val wIncl = W.partitionBy(col("_c")).orderBy(col("_v"))
-        .rowsBetween(W.unboundedPreceding, 0)
-      cen
-        .join(broadcast(offs.select(col("_c"), col("_offa"), col("_offb"))), Seq("_c"))
-        .withColumn("_ca", col("_offa") + sum(col("_na")).over(wIncl))
-        .withColumn("_cb", col("_offb") + sum(col("_nb")).over(wIncl))
-    }
+    val ranked = RankedPrefix(census, Nil,
+      Seq("_ca" -> col("_na"), "_cb" -> col("_nb")),
+      direct = nd <= directWindowRows, mn = mn, mx = mx, cells = cells,
+      offsetRows = _ => cells.toLong)
     val gaps = ranked.select(col("_v"),
       abs(col("_ca").cast("double") / lit(ta.toDouble)
         - col("_cb").cast("double") / lit(tb.toDouble)).as("_gap"))
@@ -199,11 +149,12 @@ object StatTests {
     * corpus values: the evaluation frame is the groups × distinct-
     * values spine — the intrinsic cost of the statistic (bounded by
     * groups × census, NOT groups × rows; fine at dashboard group
-    * cardinality, and every window below is (group, cell)-partitioned
-    * so no group ever ranks in one task). The global cumulative is
-    * computed ONCE (solo cell machinery) and rides the spine; the
-    * group cumulative is a (group, cell)-partitioned inclusive prefix
-    * over the spine's zero-filled group counts; rest = global − group,
+    * cardinality). The global cumulative is computed ONCE (a solo
+    * [[RankedPrefix]]) and rides the spine; the group cumulative is a
+    * group-keyed [[RankedPrefix]] inclusive prefix over the spine's
+    * zero-filled group counts, (group, cell)-partitioned past the
+    * direct-window gate so no group ever ranks in one task; rest =
+    * global − group,
     * an exact Long subtraction. Gap, max, and the z-scaling follow
     * [[ksTwoSample]]'s engine-exact dag per group.
     *
@@ -216,9 +167,8 @@ object StatTests {
   def ksGroupVsRest(
       df: DataFrame, group: Column, value: Column,
       cells: Int = 4096,
-      directWindowRows: Long = DefaultDirectWindowRows): DataFrame = {
+      directWindowRows: Long = RankedPrefix.DefaultDirectWindowRows): DataFrame = {
     require(cells >= 1, s"cells must be >= 1, got $cells")
-    val W = org.apache.spark.sql.expressions.Window
     val nn = df.filter(group.isNotNull)
       .select(group.as("_g"), value.cast("double").as("_v"))
     val censusGvAll = nn.groupBy(col("_g"), col("_v"))
@@ -249,37 +199,15 @@ object StatTests {
     val bigN = bounds.getLong(2)
     val nd = bounds.getLong(3)
     val direct = nd <= directWindowRows
-    // global inclusive cumulative (ONE copy, shared by every group
-    // through the spine): direct bounded window when the census is
-    // small ([[DefaultDirectWindowRows]] — same exact Long sums), the
-    // solo cell machinery otherwise
-    val cumAll =
-      if (direct)
-        censusV.withColumn("_cumAll",
-            sum(col("_nAll")).over(
-              W.orderBy(col("_v")).rowsBetween(W.unboundedPreceding, 0)))
-          .select(col("_v"), col("_cumAll"))
-      else {
-        val width = (mx - mn) / cells
-        val cell =
-          if (mx == mn) lit(0L)
-          else least(lit(cells - 1L), floor((col("_v") - lit(mn)) / lit(width)))
-        val cenV = censusV.withColumn("_c", cell)
-        val offsV = cenV.groupBy(col("_c")).agg(sum(col("_nAll")).as("_tc"))
-          .withColumn("_off",
-            coalesce(sum(col("_tc")).over(
-              W.orderBy(col("_c")).rowsBetween(W.unboundedPreceding, -1)), lit(0L)))
-        val wIncl = W.partitionBy(col("_c")).orderBy(col("_v"))
-          .rowsBetween(W.unboundedPreceding, 0)
-        // persisted on the CELL path only: there the spine is consumed
-        // twice (offset aggregate + ranked join); the direct spine has
-        // one consumer, so a cache would only add a materialization
-        cenV
-          .join(broadcast(offsV.select(col("_c"), col("_off"))), Seq("_c"))
-          .withColumn("_cumAll", col("_off") + sum(col("_nAll")).over(wIncl))
-          .select(col("_v"), col("_c"), col("_cumAll"))
-          .persistCensus()
-      }
+    // global inclusive cumulative: ONE copy, shared by every group
+    // through the spine. Persisted on the CELL path only: there the
+    // spine built on it is consumed twice (per-cell totals + ranked
+    // join); the direct spine has one consumer, so a cache would only
+    // add a materialization
+    val cumAllRanked = RankedPrefix(censusV, Nil, Seq("_cumAll" -> col("_nAll")),
+        direct, mn, mx, cells, offsetRows = _ => cells.toLong)
+      .select(col("_v"), col("_cumAll"))
+    val cumAll = if (direct) cumAllRanked else cumAllRanked.persistCensus()
     // group totals (group-scale) and the groups × values spine.
     // Broadcasts are cardinality-adaptive (the grouped-eval family's
     // convention): the group count rode the bounds job above, and
@@ -288,35 +216,13 @@ object StatTests {
     // driver.
     val groupTot = censusGv.groupBy(col("_g")).agg(sum(col("_n")).as("_tg"))
     val nGroups = bounds.getLong(4)
-    val broadcastLimit = Limits.BroadcastRowLimit
-    def bcIfSmall(f: DataFrame, rows: Long): DataFrame =
-      if (rows <= broadcastLimit) broadcast(f) else f
     val spine = cumAll
-      .crossJoin(bcIfSmall(groupTot, nGroups))
+      .crossJoin(Limits.broadcastIfSmall(groupTot, nGroups))
       .join(censusGv, Seq("_g", "_v"), "left")
       .withColumn("_ng", coalesce(col("_n"), lit(0L)))
-    val ranked =
-      if (direct)
-        // per-group inclusive prefix in ONE group-partitioned window
-        // (≤ nd ≤ directWindowRows rows per partition, bounded)
-        spine.withColumn("_cumG",
-          sum(col("_ng")).over(W.partitionBy(col("_g")).orderBy(col("_v"))
-            .rowsBetween(W.unboundedPreceding, 0)))
-      else {
-        // per-group inclusive prefix: (group, cell)-partitioned window
-        // offset by per-(group, cell) totals — groups×cells offset rows
-        val perGc = spine.groupBy(col("_g"), col("_c")).agg(sum(col("_ng")).as("_tgc"))
-        val wg = W.partitionBy(col("_g")).orderBy(col("_c"))
-          .rowsBetween(W.unboundedPreceding, -1)
-        val offsG = perGc.withColumn("_offg",
-          coalesce(sum(col("_tgc")).over(wg), lit(0L)))
-        val wgIncl = W.partitionBy(col("_g"), col("_c")).orderBy(col("_v"))
-          .rowsBetween(W.unboundedPreceding, 0)
-        spine
-          .join(bcIfSmall(offsG.select(col("_g"), col("_c"), col("_offg")),
-            nGroups * cells), Seq("_g", "_c"))
-          .withColumn("_cumG", col("_offg") + sum(col("_ng")).over(wgIncl))
-      }
+    // per-group inclusive prefix over the zero-filled spine counts
+    val ranked = RankedPrefix(spine, Seq("_g"), Seq("_cumG" -> col("_ng")),
+      direct, mn, mx, cells, offsetRows = _ => nGroups * cells)
     // the when-guard keeps the rest-side divisor live only when the
     // rest is non-empty (ANSI mode raises on /0 otherwise); the
     // degenerate whole-corpus group gets NULL gaps, masked below
@@ -365,7 +271,7 @@ object StatTests {
     * union of both buckets' values). Valid pairs (both buckets
     * present in the census) come from a bucket-scale self-join —
     * calendar-bounded, like the arrival-gaps spine. Prefixes are
-    * (pair, cell)-partitioned with cardinality-adaptive offset
+    * pair-keyed [[RankedPrefix]] sums with cardinality-adaptive offset
     * broadcasts; gap/max/z follow [[ksTwoSample]]'s engine-exact dag.
     *
     * Output: one row per adjacent pair — (bucket_start_us,
@@ -376,10 +282,9 @@ object StatTests {
   def ksAdjacentPeriods(
       df: DataFrame, ts: Column, value: Column,
       bucketSeconds: Long, cells: Int = 4096,
-      directWindowRows: Long = DefaultDirectWindowRows): DataFrame = {
+      directWindowRows: Long = RankedPrefix.DefaultDirectWindowRows): DataFrame = {
     require(bucketSeconds >= 1, s"bucketSeconds must be >= 1, got $bucketSeconds")
     require(cells >= 1, s"cells must be >= 1, got $cells")
-    val W = org.apache.spark.sql.expressions.Window
     val width = bucketSeconds * 1000000L
     val us = unix_micros(ts)
     val nn = df.filter(ts.isNotNull)
@@ -409,47 +314,20 @@ object StatTests {
     // valid pairs = buckets whose successor bucket also has census
     // rows: a bucket-scale (calendar-bounded) self-join
     val nPairs = bounds.getLong(2) // ≥ true pair count: adaptivity-safe
-    val broadcastLimit = Limits.BroadcastRowLimit
-    def bcIfSmall(f: DataFrame, rows: Long): DataFrame =
-      if (rows <= broadcastLimit) broadcast(f) else f
     val pc = adjacentPairCensus(census, "_v", width, nPairs).persistCensus()
     val tot = pc.groupBy(col("_p"))
       .agg(sum(col("_nl")).as("_tl"), sum(col("_nr")).as("_tr"),
         count(lit(1)).as("_nd"))
-    // pair census ≤ 2× value census rows: a safe direct-path gate
-    val ranked = if (2L * bounds.getLong(3) <= directWindowRows) {
-      // direct path (pair census fits bounded pair windows — see
-      // [[DefaultDirectWindowRows]]): per-pair inclusive prefixes in
-      // one pair-partitioned window, no cell/offset apparatus
-      val wd = W.partitionBy(col("_p")).orderBy(col("_v"))
-        .rowsBetween(W.unboundedPreceding, 0)
-      pc.withColumn("_cl", sum(col("_nl")).over(wd))
-        .withColumn("_cr", sum(col("_nr")).over(wd))
-    } else {
-      // GLOBAL bounds for the cells (the grouped-family convention:
-      // cells only control window parallelism)
-      val width2 = (mx - mn) / cells
-      val cell =
-        if (mx == mn) lit(0L)
-        else least(lit(cells - 1L), floor((col("_v") - lit(mn)) / lit(width2)))
-      val cen = pc.withColumn("_c", cell)
-      val perPc = cen.groupBy(col("_p"), col("_c"))
-        .agg(sum(col("_nl")).as("_tcl"), sum(col("_nr")).as("_tcr"))
-      val wp = W.partitionBy(col("_p")).orderBy(col("_c"))
-        .rowsBetween(W.unboundedPreceding, -1)
-      val offs = perPc
-        .withColumn("_offl", coalesce(sum(col("_tcl")).over(wp), lit(0L)))
-        .withColumn("_offr", coalesce(sum(col("_tcr")).over(wp), lit(0L)))
-      val wIncl = W.partitionBy(col("_p"), col("_c")).orderBy(col("_v"))
-        .rowsBetween(W.unboundedPreceding, 0)
-      cen
-        .join(bcIfSmall(offs.select(col("_p"), col("_c"), col("_offl"), col("_offr")),
-          nPairs * cells), Seq("_p", "_c"))
-        .withColumn("_cl", col("_offl") + sum(col("_nl")).over(wIncl))
-        .withColumn("_cr", col("_offr") + sum(col("_nr")).over(wIncl))
-    }
+    // per-pair inclusive prefixes; the pair census is ≤ 2× the value
+    // census rows, a safe direct-path gate. GLOBAL bounds set the
+    // cells (the grouped-family convention: cells only control window
+    // parallelism)
+    val ranked = RankedPrefix(pc, Seq("_p"),
+      Seq("_cl" -> col("_nl"), "_cr" -> col("_nr")),
+      direct = 2L * bounds.getLong(3) <= directWindowRows, mn = mn, mx = mx,
+      cells = cells, offsetRows = _ => nPairs * cells)
     val gaps = ranked
-      .join(bcIfSmall(tot, nPairs), Seq("_p"))
+      .join(Limits.broadcastIfSmall(tot, nPairs), Seq("_p"))
       .select(col("_p"), col("_v"), col("_tl"), col("_tr"), col("_nd"),
         abs(col("_cl").cast("double") / col("_tl").cast("double")
           - col("_cr").cast("double") / col("_tr").cast("double")).as("_gap"))
@@ -489,7 +367,7 @@ object StatTests {
     val bks = census.select(col("_b")).distinct()
     val valid = bks.select(col("_b").as("_p"))
       .join(bks.select((col("_b") - lit(width)).as("_p")), Seq("_p"))
-    val hinted = if (nBuckets <= Limits.BroadcastRowLimit) broadcast(valid) else valid
+    val hinted = Limits.broadcastIfSmall(valid, nBuckets)
     census
       .select(col("_b").as("_p"), col(keyName),
         col("_n").as("_nl"), lit(0L).as("_nr"))
@@ -546,7 +424,7 @@ object StatTests {
     val pc = adjacentPairCensus(censusAll, "_k", width, nBuckets).persistCensus()
     val tot = pc.groupBy(col("_p"))
       .agg(sum(col("_nl")).as("_tl"), sum(col("_nr")).as("_tr"))
-    val totHinted = if (nBuckets <= Limits.BroadcastRowLimit) broadcast(tot) else tot
+    val totHinted = Limits.broadcastIfSmall(tot, nBuckets)
     // pooled expectation per cell; totals ≥ 1 per valid side and
     // nl + nr ≥ 1 per census-driven cell, so both divisors are live
     val el = col("left_total").cast("double") *
@@ -732,15 +610,12 @@ object StatTests {
       .groupBy(col("_k"), col("_b")).agg(count(lit(1)).as("n"))
       .persistCensus()
     val nKeys = daily.agg(countDistinct(col("_k"))).head().getLong(0)
-    val limit = Limits.BroadcastRowLimit
-    def bcIfSmall(f: DataFrame, rows: Long): DataFrame =
-      if (rows <= limit) broadcast(f) else f
     val tot = daily.groupBy(col("_k").as("_tk"))
       .agg(count(lit(1)).as("_d"), sum(col("n")).as("_N"))
     val w = W.partitionBy(col("_k")).orderBy(col("_b"))
       .rowsBetween(W.unboundedPreceding, 0)
     val cum = daily
-      .join(bcIfSmall(tot, nKeys), col("_k") === col("_tk"))
+      .join(Limits.broadcastIfSmall(tot, nKeys), col("_k") === col("_tk"))
       .drop("_tk")
       .withColumn("cum_n", sum(col("n")).over(w))
       .withColumn("_j", row_number().over(W.partitionBy(col("_k")).orderBy(col("_b"))))
@@ -758,7 +633,7 @@ object StatTests {
         col("_b").as("_b"))).as("_m"))
       .select(col("_pk"), col("_m._b").as("_pb"))
     val out = cum
-      .join(bcIfSmall(peakPerK, nKeys), col("_k") === col("_pk"))
+      .join(Limits.broadcastIfSmall(peakPerK, nKeys), col("_k") === col("_pk"))
       .select(col("_k").as("key"), col("_b").as("bucket_start_us"),
         col("n"), col("cum_n"),
         col("cusum_scaled").cast("double").as("cusum_scaled"),
@@ -837,11 +712,10 @@ object StatTests {
     * groups × global-spine blowup.
     *
     * One (group, value, countA, countB) census is the only scan of
-    * the input. Cumulatives are (group, cell)-partitioned inclusive
-    * prefixes offset by per-(group, cell) totals (the [[ksTwoSample]]
-    * cell trick with the group riding the partition key), so a group
-    * with billions of distinct values ranks `cells`-way parallel —
-    * no unpartitioned window anywhere. Offsets/totals broadcasts are
+    * the input. Cumulatives are group-keyed [[RankedPrefix]] inclusive
+    * prefixes ((group, cell)-partitioned past the direct-window gate),
+    * so a group with billions of distinct values ranks `cells`-way
+    * parallel. Offsets/totals broadcasts are
     * cardinality-adaptive ([[graft.Limits.BroadcastRowLimit]]).
     * Every cumulative count is an exact Long; gap, sup, and the
     * z-scaling follow [[ksTwoSample]]'s engine-exact dag per group,
@@ -857,9 +731,8 @@ object StatTests {
   def ksTwoSampleBy(
       df: DataFrame, group: Column, value: Column, inA: Column,
       cells: Int = 4096,
-      directWindowRows: Long = DefaultDirectWindowRows): DataFrame = {
+      directWindowRows: Long = RankedPrefix.DefaultDirectWindowRows): DataFrame = {
     require(cells >= 1, s"cells must be >= 1, got $cells")
-    val W = org.apache.spark.sql.expressions.Window
     val nn = df.filter(group.isNotNull && inA.isNotNull)
       .select(group.as("_g"), value.cast("double").as("_v"),
         when(inA.cast("boolean"), 1L).otherwise(0L).as("_a"),
@@ -886,48 +759,15 @@ object StatTests {
     }
     val (mn, mx) = (bounds.getDouble(0), bounds.getDouble(1))
     val nGroups = bounds.getLong(2)
-    def bcIfSmall(f: DataFrame, rows: Long): DataFrame =
-      if (rows <= Limits.BroadcastRowLimit) broadcast(f) else f
-    val ranked = if (bounds.getLong(3) <= directWindowRows) {
-      // direct path (census fits bounded group windows — see
-      // [[DefaultDirectWindowRows]]): per-group inclusive prefixes and
-      // group totals straight off the census, no cell/offset apparatus
-      val wd = W.partitionBy(col("_g")).orderBy(col("_v"))
-        .rowsBetween(W.unboundedPreceding, 0)
-      val groupTot = census.groupBy(col("_g"))
-        .agg(sum(col("_na")).as("_ta"), sum(col("_nb")).as("_tb"))
-      census
-        .withColumn("_ca", sum(col("_na")).over(wd))
-        .withColumn("_cb", sum(col("_nb")).over(wd))
-        .join(bcIfSmall(groupTot, nGroups), Seq("_g"))
-    } else {
-      val width = (mx - mn) / cells
-      val cell =
-        if (mx == mn) lit(0L)
-        else least(lit(cells - 1L), floor((col("_v") - lit(mn)) / lit(width)))
-      val cen = census.withColumn("_c", cell)
-      // per-(group, cell) cohort totals -> exclusive offsets, group-
-      // partitioned (bounded windows: ≤ cells rows per group partition)
-      val perGc = cen.groupBy(col("_g"), col("_c"))
-        .agg(sum(col("_na")).as("_tca"), sum(col("_nb")).as("_tcb"))
-      val wOff = W.partitionBy(col("_g")).orderBy(col("_c"))
-        .rowsBetween(W.unboundedPreceding, -1)
-      val offs = perGc
-        .withColumn("_offa", coalesce(sum(col("_tca")).over(wOff), lit(0L)))
-        .withColumn("_offb", coalesce(sum(col("_tcb")).over(wOff), lit(0L)))
-      val groupTot = perGc.groupBy(col("_g"))
-        .agg(sum(col("_tca")).as("_ta"), sum(col("_tcb")).as("_tb"),
-          count(lit(1)).as("_ncells"))
-      val wIncl = W.partitionBy(col("_g"), col("_c")).orderBy(col("_v"))
-        .rowsBetween(W.unboundedPreceding, 0)
-      cen
-        .join(bcIfSmall(offs.select(col("_g"), col("_c"), col("_offa"), col("_offb")),
-          nGroups * cells), Seq("_g", "_c"))
-        .withColumn("_ca", col("_offa") + sum(col("_na")).over(wIncl))
-        .withColumn("_cb", col("_offb") + sum(col("_nb")).over(wIncl))
-        .join(bcIfSmall(groupTot.select(col("_g"), col("_ta"), col("_tb")), nGroups),
-          Seq("_g"))
-    }
+    // per-group inclusive prefixes, then the group totals straight off
+    // the census
+    val groupTot = census.groupBy(col("_g"))
+      .agg(sum(col("_na")).as("_ta"), sum(col("_nb")).as("_tb"))
+    val ranked = RankedPrefix(census, Seq("_g"),
+        Seq("_ca" -> col("_na"), "_cb" -> col("_nb")),
+        direct = bounds.getLong(3) <= directWindowRows, mn = mn, mx = mx,
+        cells = cells, offsetRows = _ => nGroups * cells)
+      .join(Limits.broadcastIfSmall(groupTot, nGroups), Seq("_g"))
     // the when-guard keeps both divisors live only when both cohorts
     // are non-empty (ANSI raises on double /0); empty-cohort groups
     // get NULL stats below

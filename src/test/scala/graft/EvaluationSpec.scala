@@ -27,24 +27,32 @@ class EvaluationSpec extends AnyFunSuite {
   test("rankedMass direct-window path is bit-identical to the cell path (solo and grouped)") {
     // the r21 cardinality-adaptive direct prefix must produce the same
     // (_v, _cumNeg) rows as the cell/offset machinery — force each
-    // path via directWindowRows (Long.MaxValue = direct, 0 = cell)
+    // path via directWindowRows (Long.MaxValue = direct, 0 = cell).
+    // The descending AP census (_cumPos, _cumN) rides the same check.
     val rnd = new scala.util.Random(53)
     val nn = (1 to 400).map { i =>
       val pos = i % 3 == 0
       (s"g${i % 4}", math.rint(rnd.nextGaussian() * 16) / 16,
         if (pos) 1L else 0L, if (pos) 0L else 1L)
     }.toDF("_g", "_v", "_pw", "_nw")
-    def rows(direct: Long, grouped: Boolean) = {
+    val scored = nn.select($"_g".as("g"), $"_v".as("s"), ($"_pw" === 1L).as("y"))
+    def rows(direct: Long, grouped: Boolean, desc: Boolean) = {
       val ranked =
-        (if (grouped) Evaluation.rankedMassBy(nn, 4096, 1L << 22, direct)
-         else Evaluation.rankedMass(nn.drop("_g"), 4096, direct)).get._1
-      val cols = if (grouped) Seq("_g", "_v", "_cumNeg") else Seq("_v", "_cumNeg")
+        if (desc)
+          Evaluation.descRankedCensus(scored, if (grouped) Some($"g") else None,
+            $"s", $"y", 4096, 1L << 22, direct).get._1
+        else
+          Evaluation.rankedMass(if (grouped) nn else nn.drop("_g"), grouped, 4096,
+            1L << 22, direct).get._1
+      val prefixes = if (desc) Seq("_cumPos", "_cumN") else Seq("_cumNeg")
+      val cols = (if (grouped) Seq("_g", "_v") else Seq("_v")) ++ prefixes
       ranked.select(cols.map(col): _*)
     }
-    for (grouped <- Seq(false, true)) {
-      val d = rows(Long.MaxValue, grouped)
-      val c = rows(0L, grouped)
-      assert(d.exceptAll(c).count() == 0 && c.exceptAll(d).count() == 0)
+    for (grouped <- Seq(false, true); desc <- Seq(false, true)) {
+      val d = rows(Long.MaxValue, grouped, desc)
+      val c = rows(0L, grouped, desc)
+      assert(d.exceptAll(c).count() == 0 && c.exceptAll(d).count() == 0,
+        s"grouped=$grouped desc=$desc")
       assert(d.count() == c.count())
     }
   }

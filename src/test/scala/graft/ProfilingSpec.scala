@@ -553,6 +553,32 @@ class ProfilingSpec extends AnyFunSuite {
       a.getAs[Double]("spearman_rho")) < 0.05)
   }
 
+  test("spearmanCorr/spearmanCorrBy direct-window path is bit-identical to the cell path") {
+    // force each RankedPrefix path via directWindowRows (Long.MaxValue =
+    // direct, 0 = cell): the doubled midranks are exact Long prefixes,
+    // so n and rho must match bit for bit, solo and per group
+    val rnd = new scala.util.Random(71)
+    val df = (1 to 300).map { i =>
+      (s"g${i % 4}", math.rint(rnd.nextGaussian() * 8) / 4,
+        if (i % 4 == 3) 1.0 else math.rint(rnd.nextGaussian() * 5))
+    }.toDF("g", "x", "y")
+    def same(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame): Unit = {
+      assert(a.count() == b.count())
+      assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0)
+    }
+    for (cells <- Seq(1, 5, 4096)) {
+      same(Profiling.spearmanCorr(df, col("x"), col("y"), cells, Long.MaxValue),
+        Profiling.spearmanCorr(df, col("x"), col("y"), cells, 0L))
+      same(Profiling.spearmanCorrBy(df, col("g"), col("x"), col("y"), cells,
+          Limits.BroadcastRowLimit, Long.MaxValue),
+        Profiling.spearmanCorrBy(df, col("g"), col("x"), col("y"), cells,
+          Limits.BroadcastRowLimit, 0L))
+    }
+    // the shuffled offsets join (broadcast limit 0) changes no row either
+    same(Profiling.spearmanCorrBy(df, col("g"), col("x"), col("y"), 8, 0L, 0L),
+      Profiling.spearmanCorrBy(df, col("g"), col("x"), col("y")))
+  }
+
   test("spearmanCorrBy: per-group rho equals spearmanCorr run on each group alone") {
     val rnd = new scala.util.Random(67)
     val rows = (1 to 240).map { i =>

@@ -420,6 +420,59 @@ class PropertySpec extends AnyFunSuite {
       s"rank correlation must survive a monotone transform: $rho vs $rho3")
   }
 
+  /** (key, value, mass a, mass b) census rows, or running sums over them. */
+  private type Row4 = (String, Double, Long, Long)
+
+  test("RankedPrefix: direct == cell == naive running sums on random censuses, every mode") {
+    import graft.operators.RankedPrefix
+    val rnd = new scala.util.Random(20261020L)
+    // keyed census: distinct (key, v) rows, tied values across keys,
+    // negative values, zero masses, and a key with a single row
+    val keyed: Seq[Row4] =
+      ((for (k <- 0 until 4; _ <- 0 until 40)
+        yield (s"k$k", (rnd.nextInt(31) - 15) / 2.0)).distinct :+ ("one" -> 0.25))
+        .map { case (k, v) => (k, v, rnd.nextInt(5).toLong, rnd.nextInt(3).toLong) }
+    // single-value census (mx == mn: every row in cell 0)
+    val flat: Seq[Row4] = Seq(("a", 1.5, 2L, 1L), ("b", 1.5, 0L, 4L), ("c", 1.5, 3L, 3L))
+    def solo(rows: Seq[Row4]): Seq[Row4] =
+      rows.groupBy(_._2).toSeq.map { case (v, rs) => ("", v, rs.map(_._3).sum, rs.map(_._4).sum) }
+    // naive per-key running sums of `a` and (two sums) `a + b`
+    def naive(rows: Seq[Row4], desc: Boolean, excl: Boolean, nSums: Int): Seq[Row4] =
+      rows.groupBy(_._1).values.flatMap { rs =>
+        val sorted = rs.sortBy(r => if (desc) -r._2 else r._2)
+        val cum = sorted.scanLeft((0L, 0L)) { case ((a, ab), r) => (a + r._3, ab + r._3 + r._4) }
+        sorted.zip(if (excl) cum.init else cum.tail).map { case (r, (a, ab)) =>
+          (r._1, r._2, a, if (nSums == 2) ab else 0L)
+        }
+      }.toSeq.sorted
+    def run(rows: Seq[Row4], isKeyed: Boolean, desc: Boolean, excl: Boolean, nSums: Int,
+        direct: Boolean, cells: Int, offRows: Long): Seq[Row4] = {
+      val df = rows.toDF("_k", "_v", "_a", "_b")
+      val sums = Seq("_s0" -> $"_a", "_s1" -> ($"_a" + $"_b")).take(nSums)
+      RankedPrefix(if (isKeyed) df else df.drop("_k"), if (isKeyed) Seq("_k") else Nil, sums,
+          direct, rows.map(_._2).min, rows.map(_._2).max, cells, _ => offRows,
+          descending = desc, exclusive = excl)
+        .select(if (isKeyed) $"_k" else lit(""), $"_v", $"_s0",
+          if (nSums == 2) $"_s1" else lit(0L))
+        .as[Row4].collect().toSeq.sorted
+    }
+    for ((census, cellCounts) <- Seq(keyed -> Seq(1, 3, 4096), flat -> Seq(3));
+         isKeyed <- Seq(false, true);
+         (desc, excl) <- Seq((false, false), (false, true), (true, false));
+         nSums <- Seq(1, 2)) {
+      val rows = if (isKeyed) census else solo(census)
+      val expect = naive(rows, desc, excl, nSums)
+      val mode = s"keyed=$isKeyed desc=$desc excl=$excl sums=$nSums"
+      assert(run(rows, isKeyed, desc, excl, nSums, direct = true, 4096, 0L) == expect,
+        s"direct: $mode")
+      // offsets under the broadcast limit (broadcast join) and over it
+      // (shuffled join)
+      for (cells <- cellCounts; offRows <- Seq(1L, Long.MaxValue))
+        assert(run(rows, isKeyed, desc, excl, nSums, direct = false, cells, offRows) == expect,
+          s"cell: $mode cells=$cells offsetRows=$offRows")
+    }
+  }
+
   test("retrievalQuality invariants: hits monotone in k, recall/precision consistent") {
     import graft.operators.Ranking
     val runGen = for {
